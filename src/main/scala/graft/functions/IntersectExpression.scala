@@ -1,11 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory}
 import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Merge-count of two SORTED string arrays' set intersection.
@@ -59,10 +60,25 @@ object IntersectAlgebra {
   }
 }
 
+/** Inputs must be string arrays under UTF8_BINARY: the merge compares
+  * raw bytes, which is the collation's order only for that collation.
+  */
 case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
+
+  override def inputTypes: Seq[ArrayType] =
+    Seq(ArrayType(StringType), ArrayType(StringType))
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    children.map(_.dataType).collectFirst {
+      case ArrayType(st: StringType, _)
+          if st.collationId != CollationFactory.UTF8_BINARY_COLLATION_ID =>
+        TypeCheckResult.TypeCheckFailure(
+          s"$prettyName compares UTF-8 bytes and needs UTF8_BINARY " +
+            s"strings, got ${st.catalogString}")
+    }.getOrElse(super.checkInputDataTypes())
 
   override def nullSafeEval(a: Any, b: Any): Any =
     IntersectAlgebra.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])

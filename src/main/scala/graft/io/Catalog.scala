@@ -56,9 +56,25 @@ class ParquetCatalog(spark: SparkSession, root: String) {
     if (fs.exists(path)) { fs.delete(path, true); () }
   }
 
+  /** True iff `table` holds at least one data file. A directory
+    * without any — a product that wrote no rows, or `deleteProduct` of
+    * the table's last product — reads as absent: Spark cannot infer a
+    * schema from it, so readers such as the id watermarks must skip it.
+    */
   def exists(table: String): Boolean = {
     val path = new org.apache.hadoop.fs.Path(s"$root/$table")
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base = path.toUri.getPath
+    fs.exists(path) && {
+      val files = fs.listFiles(path, true)
+      var found = false
+      while (!found && files.hasNext) {
+        // skip _SUCCESS, .crc and anything under _temporary
+        found = files.next().getPath.toUri.getPath.stripPrefix(base)
+          .split('/').forall(s => !s.startsWith("_") && !s.startsWith("."))
+      }
+      found
+    }
   }
 
   /** True iff `table` holds a partition for this product (cheap fs

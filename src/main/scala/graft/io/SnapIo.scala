@@ -91,7 +91,9 @@ object SnapIo {
     * backends) when the path exists — the version-claim primitive.
     *
     * PER-SCHEME CONCURRENCY GUARANTEES: the claim is ATOMIC on bare
-    * local paths (java.nio `CREATE_NEW` is one syscall) and on
+    * local paths (the bytes go to a private temp file first, then
+    * `link(2)` claims the name — one syscall that fails if it exists,
+    * so a reader never sees a claimed manifest before its content) and on
     * `hdfs:` (the NameNode serializes `create(overwrite=false)`).
     * On `file:` and `s3a:` Hadoop's implementation is
     * CHECK-THEN-CREATE — two racing writers can both believe they
@@ -153,8 +155,16 @@ object SnapIo {
             throw new java.nio.file.FileAlreadyExistsException(p)
         }
       try out.write(bytes) finally out.close()
-    } else
-      Files.write(Paths.get(p), bytes, StandardOpenOption.CREATE_NEW)
+    } else {
+      val target = Paths.get(p)
+      val tmp = target.resolveSibling(
+        s".${target.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+      try {
+        Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW)
+        Files.createLink(target, tmp)
+      } finally Files.deleteIfExists(tmp)
+      ()
+    }
 
   /** Create or overwrite `p` with `bytes`. */
   def write(p: String, bytes: Array[Byte]): Unit =

@@ -135,10 +135,6 @@ object SnapTable {
     def prefixOfBytes(b: Array[Byte]): (String, Boolean) =
       if (b.length <= maxLen) (enc(b), false)
       else (enc(java.util.Arrays.copyOfRange(b, 0, maxLen)), true)
-
-    /** Truncate raw UTF-8 bytes of `s` to the stored prefix. */
-    def prefixOf(s: String): (String, Boolean) =
-      prefixOfBytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Per-file box for one STRING column: url-base64 UTF-8 prefixes of
@@ -651,299 +647,76 @@ object SnapTable {
     }
   }
 
-  /** Write `df` under `root/data/<uuid>/` and return its per-file
-    * stats — a delta-sized read-back of only the freshly written
-    * files, never the table.
+  /** Write `df` under `root/data/<uuid>/` as one commit's files and
+    * return their stats. `filesPerCommit` shapes the frame: `1` is one
+    * file, `n` range-partitions on the primary stat column, and `-1`
+    * keeps a frame the caller already shaped (compactZ, the bucket and
+    * cell routers). Every partition then runs one [[SnapDataWriter]] —
+    * the task writer the DSv2 write uses — which computes its file's
+    * boxes, null counts, sums, string boxes and blooms while writing,
+    * so the stats come from committed task messages and no pass reads
+    * the new files back. A speculative or retried attempt's file is
+    * never in the collected messages, so it cannot inflate the stats.
     */
   private def writeFiles(df: DataFrame, root: String,
       statCols: Seq[String], filesPerCommit: Int): Seq[FileStat] = {
-    val spark = df.sparkSession
+    import org.apache.spark.sql.types._
     val dataDir = SnapIo.child(root, "data",
       java.util.UUID.randomUUID().toString)
-    // parquet columns carry PHYSICAL names: rename any logical column
-    // the table's mapping covers (a frame already in physical names —
-    // a rewrite's read-back — passes through; phys names are
-    // uniquified, never another field's logical name)
+    // rewrites hand in frames read raw, in PHYSICAL names: key every
+    // stat by the LOGICAL name filters arrive with, and let the writer
+    // map back to physical parquet columns (phys names are uniquified,
+    // never another field's logical name, so the inverse is exact)
     val cmap = colMap(root)
-    val physed =
-      if (cmap.isEmpty) df
-      else df.select(df.columns.toSeq.map(c =>
-        col(c).as(cmap.getOrElse(c, c))): _*)
-    def physC(c: String): String =
-      if (physed.columns.contains(c)) c else cmap.getOrElse(c, c)
+    val logicalOf = cmap.map(_.swap)
+    val schema = org.apache.spark.sql.graft.SchemaShim.asNullable(
+      StructType(df.schema.fields.map(f =>
+        if (cmap.contains(f.name)) f
+        else f.copy(name = logicalOf.getOrElse(f.name, f.name)))))
+    def field(c: String): StructField =
+      schema.fields.find(_.name == c)
+        .orElse(schema.fields.find(_.name.equalsIgnoreCase(c)))
+        .getOrElse(throw new IllegalArgumentException(
+          s"statCols column $c is not in the written schema " +
+            schema.fieldNames.mkString("[", ",", "]")))
+    statCols.foreach { c =>
+      val dt = field(c).dataType
+      require(Seq(LongType, IntegerType, ShortType, ByteType, DateType,
+        TimestampType).contains(dt),
+        s"statCols column $c must be bigint/int/date/timestamp, is $dt")
+    }
     val shaped =
-      if (filesPerCommit == -1) physed // pre-shaped (compactZ)
-      else if (filesPerCommit == 1) physed.coalesce(1)
-      else physed.repartitionByRange(filesPerCommit,
-        col(physC(statCols.head)))
-    // stats are computed over the physical column but recorded under
-    // the LOGICAL key — the name filters and aggregates arrive with
-    def sl(c: String) = statLong(physed.schema, physC(c))
-    // STRING BOXES ride along automatically: every top-level string
-    // column (schema order, capped) gets per-file min/max prefixes —
-    // Spark's string min/max already fold in UTF8String binary order,
-    // which IS the byte order the boxes are defined in; truncation to
-    // the stored prefix happens driver-side on the collected extremes
-    val strCols = df.schema.fields
-      .filter(_.dataType == org.apache.spark.sql.types.StringType)
-      .take(StrStat.maxCols).map(_.name).toSeq
-    // declared BLOOM columns (table property `bloomCols`): one small
-    // sketch per (file, column), folded in the SAME read-back pass as
-    // the boxes — xxhash64 of every value, the encoding the scan's
-    // point-lookup probe replays (see graft.sources.SnapBloomSkip)
+      if (filesPerCommit == -1) df // pre-shaped
+      else if (filesPerCommit == 1) df.coalesce(1)
+      else df.repartitionByRange(filesPerCommit,
+        col(df.columns(schema.fieldIndex(field(statCols.head).name))))
+    // declared BLOOM columns (table property `bloomCols`): one sketch
+    // per (file, column) plus the commit's `_agg.<col>.bf`
     val bloomCols = tableProperty(root, "bloomCols")
       .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(Nil)
-      .filter(c => df.columns.contains(c))
-    val aggs = statCols.flatMap(c => Seq(
-      min(sl(c)).as(s"mn_$c"),
-      max(sl(c)).as(s"mx_$c"))) ++
-      statCols.map(c =>
-        sum(when(col(physC(c)).isNull, 1L).otherwise(0L)).as(s"nc_$c")) ++
-      // per-file SUM via decimal(38,0): cannot overflow at any file
-      // size (and never trips ANSI); recorded only when it fits a long
-      statCols.map(c =>
-        sum(sl(c).cast("decimal(38,0)")).as(s"sm_$c")) ++
-      strCols.flatMap(c => Seq(
-        min(col(physC(c))).as(s"smn_$c"),
-        max(col(physC(c))).as(s"smx_$c"),
-        sum(when(col(physC(c)).isNull, 1L).otherwise(0L)).as(s"snc_$c"))) ++
-      bloomCols.map(c => graft.ops.BloomPrune.bloomAgg(col(physC(c)),
-        graft.sources.SnapBloomSkip.items,
-        graft.sources.SnapBloomSkip.numBits).as(s"bf_$c"))
+      .filter(c => schema.fieldNames.contains(c))
+    bloomCols.foreach { c =>
+      val dt = field(c).dataType
+      require(Seq(LongType, IntegerType, ShortType, ByteType, DateType,
+        TimestampType, StringType, BinaryType).contains(dt),
+        s"bloomCols column $c must be bigint/int/date/timestamp/" +
+          s"string/binary, is $dt")
+    }
     val bloomDir =
       if (bloomCols.isEmpty) null
-      else {
-        val d = SnapIo.child(root, "bloom",
-          java.util.UUID.randomUUID().toString)
-        SnapIo.mkdirs(d)
-        d
-      }
-    // SINGLE-FILE, NO-BLOOM commits (the overwhelming majority of gate
-    // and streaming commits) fold the stats pass INTO the write job via
-    // observe(): the whole frame is the one file, so the per-file
-    // aggregates equal the frame aggregates and the read-back scan job
-    // — one full extra job per commit, ~25 ms of driver latency plus a
-    // delta-sized scan — disappears. Bounded fallback: if the observed
-    // metrics do not arrive, or the writer produced anything but
-    // exactly one data file, the classic read-back below runs
-    // unchanged (correctness never depends on the observation).
-    // Bare-local roots only: the manifest path is derived from the
-    // directory listing and must match input_file_name()'s URI
-    // spelling, which is only pinned down for java.nio paths.
-    val observeAggs =
-      if (filesPerCommit == 1 && bloomCols.isEmpty &&
-        !SnapIo.hasScheme(root)) Some(aggs)
-      else None
-    val obs = observeAggs.map { as =>
-      val o = new org.apache.spark.sql.Observation
-      (o, shaped.observe(o, count(lit(1)).as("__rows"), as: _*))
-    }
-    obs.foreach(_._2.write.parquet(dataDir))
-    if (obs.isEmpty) shaped.write.parquet(dataDir)
-    val observed = obs.flatMap { case (o, _) =>
-      observedSingleFileStats(o, dataDir, statCols, strCols)
-    }
-    observed.getOrElse(readBackStats(spark, dataDir, statCols, strCols,
-      bloomCols, bloomDir, aggs, physC))
-  }
-
-  /** Build the single FileStat of a one-file commit from the write
-    * job's observed metrics — zero extra jobs. `None` (→ caller falls
-    * back to the read-back pass) when the metrics don't arrive in
-    * bounded time or the writer emitted more than one data file.
-    */
-  private def observedSingleFileStats(o: org.apache.spark.sql.Observation,
-      dataDir: String, statCols: Seq[String],
-      strCols: Seq[String]): Option[Seq[FileStat]] = {
-    // the write action has completed, so the listener event is already
-    // enqueued; this wait is one bus cycle, not an open-ended block
-    import org.apache.spark.sql.graft.ObservationShim
-    var m = ObservationShim.getOrEmpty(o)
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (m.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(10)
-      m = ObservationShim.getOrEmpty(o)
-    }
-    if (m.isEmpty) return None
-    val rows = m("__rows").asInstanceOf[Long]
-    // empty commit: the read-back's groupBy yields zero groups, i.e.
-    // no manifest entry — mirror that (the empty part file, if any,
-    // is unreferenced and vacuum-reclaimable, as today)
-    if (rows == 0L) return Some(Nil)
-    val parts = SnapIo.listNames(dataDir).filter(n =>
-      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-    if (parts.size != 1) return None
-    // input_file_name()'s spelling for a local file is the file: URI —
-    // keep manifests byte-compatible with read-back-produced ones
-    val path = java.nio.file.Paths
-      .get(SnapIo.child(dataDir, parts.head)).toUri.toString
-    def anyOf(k: String): Option[Any] = m.get(k).flatMap(Option(_))
-    val stats = statCols.map { c =>
-      (anyOf(s"mn_$c"), anyOf(s"mx_$c")) match {
-        case (Some(mn), Some(mx)) =>
-          c -> (mn.asInstanceOf[Long], mx.asInstanceOf[Long])
-        // all-null stat column: the sentinel full-range box
-        case _ => c -> (Long.MinValue, Long.MaxValue)
-      }
-    }
-    val nulls = statCols.map(c =>
-      c -> anyOf(s"nc_$c").fold(0L)(_.asInstanceOf[Long]))
-    val lmin = java.math.BigDecimal.valueOf(Long.MinValue)
-    val lmax = java.math.BigDecimal.valueOf(Long.MaxValue)
-    val sums = statCols.flatMap { c =>
-      anyOf(s"sm_$c").flatMap { v =>
-        val bd = v.asInstanceOf[java.math.BigDecimal]
-        if (bd.compareTo(lmin) >= 0 && bd.compareTo(lmax) <= 0)
-          Some(c -> bd.longValueExact())
-        else None // does not fit a long: omit, readers fall back
-      }
-    }
-    val strs = strCols.map { c =>
-      val nc = anyOf(s"snc_$c").fold(0L)(_.asInstanceOf[Long])
-      c -> (anyOf(s"smn_$c") match {
-        case None =>
-          StrBox("", minTrunc = false, "", maxTrunc = false, nc,
-            allNull = true)
-        case Some(mn) =>
-          val (mnP, mnT) = StrStat.prefixOf(mn.asInstanceOf[String])
-          val (mxP, mxT) = StrStat.prefixOf(
-            anyOf(s"smx_$c").get.asInstanceOf[String])
-          StrBox(mnP, mnT, mxP, mxT, nc, allNull = false)
-      })
-    }
-    Some(Seq(FileStat(path, rows, stats, nulls, sums, strStats = strs)))
-  }
-
-  /** The classic per-file stats pass: one delta-sized scan of the
-    * freshly written files, grouped by file — the general path for
-    * multi-file, bloom-carrying, or scheme'd-root commits (and the
-    * fallback when observation doesn't deliver).
-    */
-  private def readBackStats(spark: SparkSession, dataDir: String,
-      statCols: Seq[String], strCols: Seq[String], bloomCols: Seq[String],
-      bloomDir: String, aggs: Seq[Column],
-      physC: String => String): Seq[FileStat] = {
-    val fileSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-    // commit-level AGGREGATE sketches: the union of the per-file
-    // blooms, one per column, written as `_agg.<col>.bf` in the same
-    // commit dir — what lets planning reject a whole commit with ONE
-    // probe instead of per-file sidecar reads (see SnapBloomSkip)
-    val aggParts = scala.collection.mutable.Map
-      .empty[String, scala.collection.mutable.ArrayBuffer[Array[Byte]]]
-    val out = spark.read.parquet(dataDir)
-      .groupBy(input_file_name().as("path"))
-      .agg(count(lit(1)).as("rows"), aggs: _*)
-      .collect()
-      .map { r =>
-        val n = statCols.length
-        val stats = statCols.zipWithIndex.map { case (c, i) =>
-          // an all-null stat column has NULL extremes: publish the
-          // sentinel full-range box (never skipped, always safe) —
-          // the same contract as the DSv2 writer's inline stats
-          c -> (if (r.isNullAt(2 + 2 * i))
-            (Long.MinValue, Long.MaxValue)
-          else (r.getLong(2 + 2 * i), r.getLong(3 + 2 * i)))
-        }
-        val nulls = statCols.zipWithIndex.map { case (c, i) =>
-          c -> r.getLong(2 + 2 * n + i)
-        }
-        val lmin = java.math.BigDecimal.valueOf(Long.MinValue)
-        val lmax = java.math.BigDecimal.valueOf(Long.MaxValue)
-        val sums = statCols.zipWithIndex.flatMap { case (c, i) =>
-          val j = 2 + 3 * n + i
-          if (r.isNullAt(j)) None // all-null column: no sum
-          else {
-            val bd = r.getDecimal(j)
-            if (bd.compareTo(lmin) >= 0 && bd.compareTo(lmax) <= 0)
-              Some(c -> bd.longValueExact())
-            else None // does not fit a long: omit, readers fall back
-          }
-        }
-        val strs = strCols.zipWithIndex.map { case (c, j) =>
-          val base = 2 + 4 * n + 3 * j
-          val nc = r.getLong(base + 2)
-          c -> (if (r.isNullAt(base))
-            StrBox("", minTrunc = false, "", maxTrunc = false, nc,
-              allNull = true)
-          else {
-            val (mnP, mnT) = StrStat.prefixOf(r.getString(base))
-            val (mxP, mxT) = StrStat.prefixOf(r.getString(base + 1))
-            StrBox(mnP, mnT, mxP, mxT, nc, allNull = false)
-          })
-        }
-        val fi = fileSeq.getAndIncrement()
-        val blooms = bloomCols.zipWithIndex.flatMap { case (c, b) =>
-          val idx = 2 + 4 * n + 3 * strCols.length + b
-          if (r.isNullAt(idx)) None
-          else {
-            val bytes = r.getAs[Array[Byte]](idx)
-            val p = SnapIo.child(bloomDir, s"f$fi.$c.bf")
-            SnapIo.write(p, bytes)
-            aggParts.synchronized {
-              aggParts.getOrElseUpdate(c,
-                scala.collection.mutable.ArrayBuffer
-                  .empty[Array[Byte]]) += bytes
-            }
-            Some(c -> p)
-          }
-        }
-        FileStat(r.getString(0), r.getLong(1), stats, nulls, sums,
-          strStats = strs, blooms = blooms)
-      }
-      .sortBy(_.path).toSeq
-    writeAggSidecars(spark, dataDir, bloomDir, physC,
-      aggParts.toMap.map { case (c, p) => c -> p.toSeq })
-    out
-  }
-
-  /** Write the commit's `_agg.<col>.bf` aggregate sidecars, SIZED BY
-    * THE COMMIT: a multi-file commit holds ~nFiles × a file's
-    * distinct values, and a union of per-file sketches (each sized
-    * for ONE file) saturates to admit-always exactly on the bulk
-    * loads where commit-tier pruning matters most. For ≥2 files the
-    * aggregate is rebuilt FROM RAW VALUES at `items × nFiles`
-    * capacity (capped) in one column-pruned pass over the freshly
-    * written files — reading only the bloom columns, a tiny fraction
-    * of the commit the stats job just scanned in full. Single-file
-    * commits keep the zero-cost union (the one per-file sketch IS
-    * the aggregate); any failure falls back to the union, which
-    * degrades toward admit-always, never toward wrong.
-    */
-  private[graft] def writeAggSidecars(spark: SparkSession,
-      dataDir: String, bloomDir: String, physC: String => String,
-      aggParts: Map[String, Seq[Array[Byte]]]): Unit = {
-    import graft.sources.SnapBloomSkip
-    if (bloomDir == null || aggParts.isEmpty) return
-    def unionFallback(): Unit =
-      aggParts.foreach { case (c, parts) =>
-        SnapIo.write(SnapIo.child(bloomDir, SnapBloomSkip.aggName(c)),
-          SnapBloomSkip.union(parts))
-      }
-    val nFiles = aggParts.valuesIterator.map(_.size).max
-    if (nFiles <= 1) { unionFallback(); return }
-    try {
-      val cols = aggParts.keys.toSeq.sorted
-      val cap = SnapBloomSkip.aggItemsFor(nFiles)
-      val bits = org.apache.spark.util.sketch.BloomFilter
-        .optimalNumOfBits(cap, SnapBloomSkip.aggFpp)
-      val row = spark.read.parquet(dataDir)
-        .select(cols.map(c => col(physC(c))): _*)
-        .agg(
-          graft.ops.BloomPrune.bloomAgg(col(physC(cols.head)), cap, bits)
-            .as(s"bf_${cols.head}"),
-          cols.tail.map(c => graft.ops.BloomPrune
-            .bloomAgg(col(physC(c)), cap, bits).as(s"bf_$c")): _*)
-        .collect()(0)
-      cols.zipWithIndex.foreach { case (c, i) =>
-        if (row.isNullAt(i)) // all-null column: keep the union
-          SnapIo.write(SnapIo.child(bloomDir, SnapBloomSkip.aggName(c)),
-            SnapBloomSkip.union(aggParts(c)))
-        else
-          SnapIo.write(SnapIo.child(bloomDir, SnapBloomSkip.aggName(c)),
-            row.getAs[Array[Byte]](i))
-      }
-    } catch { case _: Exception => unionFallback() }
+      else SnapIo.child(root, "bloom", java.util.UUID.randomUUID().toString)
+    val factory = graft.sources.SnapWriterFactory(dataDir, schema,
+      statCols, physMap = cmap, bloomCols = bloomCols, bloomDir = bloomDir)
+    // one tracked SQL execution, so query listeners attribute its jobs
+    val qe = shaped.queryExecution
+    val messages = org.apache.spark.sql.execution.SQLExecution
+      .withNewExecutionId(qe, Some("snapWrite")) {
+        qe.toRdd.mapPartitionsWithIndex((pid, rows) =>
+          Iterator.single(factory.writeAll(pid, rows))).collect()
+      }.toSeq
+    graft.sources.SnapSource.writeCommitAgg(bloomDir, messages, cmap)
+    messages.flatMap(_.files).sortBy(_.path)
   }
 
   private def manifestBody(action: String, files: Seq[FileStat],
@@ -1374,7 +1147,9 @@ object SnapTable {
   /** Write `df` as a new commit and return the claimed version.
     * `filesPerCommit` range-partitions on the stat column so each
     * file covers a tight, near-disjoint stat range (what makes the
-    * min/max skipping sharp).
+    * min/max skipping sharp). The files and their stats come from the
+    * snap task writer in one job per shaping (see `writeFiles`); the
+    * stat column must be bigint/int/smallint/tinyint/date/timestamp.
     */
   def commit(df: DataFrame, root: String, statCol: String,
       action: String = "append", filesPerCommit: Int = 1): Int =
@@ -1385,6 +1160,8 @@ object SnapTable {
     * used for shaping); with the data pre-clustered in N dimensions
     * (e.g. [[graft.ops.ZOrder]]), every stat column's [min, max] box
     * is tight and [[readPrunedMulti]] skips files in all of them.
+    * Same single write path as [[commit]]: every box is computed by
+    * the task that writes the file.
     */
   def commitCols(df: DataFrame, root: String, statCols: Seq[String],
       action: String = "append", filesPerCommit: Int = 1): Int =

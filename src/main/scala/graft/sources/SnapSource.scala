@@ -287,7 +287,7 @@ object SnapSource {
     * single-file commits — and any failure — keep the zero-cost task
     * union, which degrades toward admit-always, never toward wrong.
     */
-  private[sources] def writeCommitAgg(bloomDir: String,
+  private[graft] def writeCommitAgg(bloomDir: String,
       messages: Seq[org.apache.spark.sql.connector.write
         .WriterCommitMessage],
       physMap: Map[String, String] = Map.empty): Unit = {
@@ -2311,7 +2311,7 @@ private[sources] class SplicedRow(required: StructType,
   *    not bolted on by the caller;
   *  - each task computes its file's row count and per-column min/max
   *    WHILE writing, so the commit needs no read-back scan at all
-  *    (the Scala API's writeFiles re-reads the fresh files);
+  *    (the Scala API's commits run the same task writer);
   *  - the driver publishes the manifest only after every task
   *    committed — a failed job leaves only never-referenced orphan
   *    files that [[SnapTable.vacuum]] ignores and readers never see.
@@ -2519,6 +2519,22 @@ case class SnapWriterFactory(dataDir: String, schema: StructType,
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     new SnapDataWriter(dataDir, partitionId, taskId, schema, statCols,
       collectKeys, physMap, rollOnKey, bucketSpec, bloomCols, bloomDir)
+
+  /** Drive one writer over a whole partition inside a plain Spark task
+    * (the Scala API's shaped commits), with the DSv2 task protocol:
+    * commit on success, abort — deleting the attempt's files — on
+    * failure.
+    */
+  def writeAll(partitionId: Int, rows: Iterator[InternalRow])
+      : SnapWriteCommit = {
+    val w = createWriter(partitionId,
+      org.apache.spark.TaskContext.get().taskAttemptId())
+    try {
+      rows.foreach(w.write)
+      w.commit().asInstanceOf[SnapWriteCommit]
+    } catch { case t: Throwable => w.abort(); throw t }
+    finally w.close()
+  }
 }
 
 /** Parquet files per task via Spark's own [[ParquetWriteSupport]] —
@@ -2544,8 +2560,8 @@ class SnapDataWriter(dataDir: String, partitionId: Int, taskId: Long,
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
 
   // declared bloom columns: (schema index, data type) — every value
-  // xxhash64'd into the file's sketch inline (same encoding the
-  // Scala writeFiles aggregate and the scan's probe use)
+  // xxhash64'd into the file's sketch inline (the encoding Spark's
+  // XxHash64 and the scan's probe use)
   private val bloomIdx: Array[(Int, DataType)] =
     bloomCols.map(c => schema.fieldIndex(c) ->
       schema.fields(schema.fieldIndex(c)).dataType).toArray
@@ -2567,16 +2583,28 @@ class SnapDataWriter(dataDir: String, partitionId: Int, taskId: Long,
     if (collectKeys) new java.util.HashSet[java.lang.Long]() else null
   private var keysOverflow = false
 
-  private val primaryIdx = schema.fieldIndex(statCols.head)
-  private def primaryVal(row: InternalRow): Long =
-    schema.fields(primaryIdx).dataType match {
-      case LongType | TimestampType => row.getLong(primaryIdx)
-      case _ => row.getInt(primaryIdx).toLong
+  // stat columns resolve case-insensitively when no exact match
+  // exists (a caller may spell a declared stat column differently);
+  // their stats stay keyed by the caller's spelling
+  private def statIdx(c: String): Int =
+    schema.fieldIndex(schema.fieldNames.find(_ == c)
+      .orElse(schema.fieldNames.find(_.equalsIgnoreCase(c))).getOrElse(c))
+  // the typed-box encoding straight off the internal representation:
+  // long as-is, timestamp = epoch micros, date = epoch days, narrower
+  // integers widened
+  private def boxVal(row: InternalRow, idx: Int): Long =
+    schema.fields(idx).dataType match {
+      case LongType | TimestampType => row.getLong(idx)
+      case ShortType => row.getShort(idx).toLong
+      case ByteType => row.getByte(idx).toLong
+      case _ => row.getInt(idx).toLong
     }
+  private val primaryIdx = statIdx(statCols.head)
+  private def primaryVal(row: InternalRow): Long = boxVal(row, primaryIdx)
 
   // STRING BOXES ride along for every top-level string column (schema
-  // order, capped) — same automatic selection as the Scala writer, so
-  // a table's manifests stay uniform whichever path committed them.
+  // order, capped), so a table's manifests stay uniform whichever
+  // API committed them.
   // Extremes are tracked as cloned UTF8Strings (binary compare IS the
   // byte order the boxes are defined in); truncation to the stored
   // prefix happens once per file at finish.
@@ -2617,7 +2645,7 @@ class SnapDataWriter(dataDir: String, partitionId: Int, taskId: Long,
     // (index into schema, running min, running max, sawValue,
     //  nullCount, running sum, sumOverflowed)
     val stats: Seq[Array[Long]] = statCols.map { c =>
-      Array[Long](schema.fieldIndex(c), Long.MaxValue, Long.MinValue, 0L,
+      Array[Long](statIdx(c), Long.MaxValue, Long.MinValue, 0L,
         0L, 0L, 0L)
     }
     // string extremes per tracked column (null = no value seen yet)
@@ -2639,9 +2667,9 @@ class SnapDataWriter(dataDir: String, partitionId: Int, taskId: Long,
             case LongType | TimestampType =>
               org.apache.spark.sql.catalyst.expressions.XXH64
                 .hashLong(row.getLong(idx), SnapBloomSkip.Seed)
-            case IntegerType | DateType =>
+            case IntegerType | DateType | ShortType | ByteType =>
               org.apache.spark.sql.catalyst.expressions.XXH64
-                .hashInt(row.getInt(idx), SnapBloomSkip.Seed)
+                .hashInt(boxVal(row, idx).toInt, SnapBloomSkip.Seed)
             case BinaryType =>
               val b = row.getBinary(idx)
               org.apache.spark.sql.catalyst.expressions.XXH64
@@ -2678,13 +2706,7 @@ class SnapDataWriter(dataDir: String, partitionId: Int, taskId: Long,
       stats.foreach { s =>
         val idx = s(0).toInt
         if (!row.isNullAt(idx)) {
-          // typed-box encoding straight off the internal
-          // representation: long as-is, timestamp = epoch micros
-          // (long), date = epoch days (int), int as itself
-          val v = schema.fields(idx).dataType match {
-            case LongType | TimestampType => row.getLong(idx)
-            case _ => row.getInt(idx).toLong
-          }
+          val v = boxVal(row, idx)
           if (v < s(1)) s(1) = v
           if (v > s(2)) s(2) = v
           s(3) = 1L
@@ -2729,9 +2751,14 @@ class SnapDataWriter(dataDir: String, partitionId: Int, taskId: Long,
               allNull = false)
           })
         }
-        val uri =
-          if (graft.io.SnapIo.hasScheme(absPath)) absPath
-          else "file:" + absPath
+        // local files are spelled the way input_file_name() and
+        // _metadata.file_path spell them: the file:/// URI
+        val hadoopUri = new HPath(absPath).toUri
+        val uri = Option(hadoopUri.getScheme) match {
+          case None => java.nio.file.Paths.get(absPath).toUri.toString
+          case Some("file") => java.nio.file.Paths.get(hadoopUri).toUri.toString
+          case _ => absPath
+        }
         val bloomRefs = bloomIdx.indices.map { bi =>
           graft.io.SnapIo.mkdirs(bloomDir)
           val name = absPath.substring(absPath.lastIndexOf('/') + 1)
@@ -2860,7 +2887,7 @@ class SnapDataWriter(dataDir: String, partitionId: Int, taskId: Long,
     }
     if (cur != null) { cur.kill(); cur = null }
     finished.result().foreach(f =>
-      try graft.io.SnapIo.delete(f.path.stripPrefix("file:"))
+      try graft.io.SnapIo.delete(SnapTable.normPath(f.path))
       catch { case _: Exception => () })
   }
 

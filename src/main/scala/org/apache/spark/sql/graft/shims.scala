@@ -30,14 +30,13 @@ object NormalizeShim {
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 }
 
-/** Bridge to `Observation.getOrEmpty` (`private[spark]`): the
-  * NON-BLOCKING metrics read. The public `get` blocks indefinitely if
-  * the listener event never lands — a commit path must instead poll
-  * bounded and fall back to its read-back pass.
+/** Bridge to `DataType.asNullable` (`private[spark]`): the schema
+  * Spark's file writers give parquet — every field, nested ones too,
+  * nullable. Snap's task writer applies it so its files match.
   */
-object ObservationShim {
-  def getOrEmpty(o: org.apache.spark.sql.Observation): Map[String, Any] =
-    o.getOrEmpty
+object SchemaShim {
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
 }
 
 /** Bridge to construct a DataFrame from a hand-built LogicalPlan

@@ -76,4 +76,15 @@ class IntersectCountSpec extends AnyFunSuite {
     assert(IntersectAlgebra.count(ad(null, "a"), ad(null, "a")) == 2L)
     assert(IntersectAlgebra.count(ad(), ad("a")) == 0L)
   }
+
+  test("input contract: string arrays only, and only under UTF8_BINARY") {
+    val collated = spark.sql("SELECT array(collate('a', 'UTF8_LCASE')) AS a, " +
+      "array(collate('A', 'UTF8_LCASE')) AS b")
+    val e = intercept[org.apache.spark.sql.AnalysisException](collated.select(
+      IntersectFunctions.sorted_intersect_count($"a", $"b")).collect())
+    assert(e.getMessage.contains("UTF8_BINARY"), e.getMessage)
+    intercept[org.apache.spark.sql.AnalysisException](
+      Seq((Seq(1, 2), Seq(2))).toDF("a", "b").select(
+        IntersectFunctions.sorted_intersect_count($"a", $"b")).collect())
+  }
 }

@@ -104,4 +104,54 @@ class ProductRunnerSpec extends AnyFunSuite {
     assert(catalog.readProduct("GeographicLevelForIndicator", s1)
       .filter($"GeographicLevelId" =!= "A0000").count() > 0)
   }
+
+  test("a product with no matched geography leaves tables readable for the next load") {
+    // every DGUID is missing from the geography reference: the product
+    // writes no IndicatorValues rows, leaving a table directory with
+    // no data files — the next load's MAX(id) probe must treat it as
+    // empty instead of failing to infer its schema
+    val dir = java.nio.file.Files.createTempDirectory("graft_runner_empty").toString
+    val catalog = new ParquetCatalog(spark, dir)
+    val unmatched = MiniCube.meta.productId
+    val normal = unmatched + 1
+    def load(pid: Long, geoRef: org.apache.spark.sql.DataFrame) =
+      ProductRunner.runGroup(spark, catalog, pid,
+        products = Map(pid -> ((MiniCube.meta.copy(productId = pid),
+          MiniCube.csv(spark)))),
+        mergeConfig = Map.empty,
+        geoRef = geoRef,
+        nullReasons = MiniCube.nullReasons(spark),
+        defaults = MiniCube.defaults,
+        uomCodeset = MiniCube.uomCodeset,
+        subjectCodeset = MiniCube.subjectCodeset)
+    load(unmatched, Seq("2099A000000000").toDF("GeographyReferenceId"))
+    assert(!catalog.exists("IndicatorValues"),
+      "a table directory without data files reads as absent")
+    val afterFirst = ProductRunner.nextIds(catalog)
+    assert(afterFirst.indicatorValueId == 1L)
+    load(normal, MiniCube.geoRef(spark))
+    val tables = Seq("IndicatorTheme", "Dimensions", "DimensionValues",
+      "Indicator", "IndicatorValues", "GeographyReferenceForIndicator",
+      "GeographicLevelForIndicator", "IndicatorMetaData", "RelatedCharts")
+    tables.foreach(t => assert(catalog.exists(t), s"$t missing"))
+    assert(catalog.readProduct("IndicatorValues", normal).count() == 6)
+    // each watermark is the table's MAX(id) + 1, and the second load's
+    // ids continue past the first load's
+    def maxId(t: String, c: String): Long =
+      catalog.read(t).agg(org.apache.spark.sql.functions.max(c))
+        .head().getLong(0)
+    val ids = ProductRunner.nextIds(catalog)
+    assert(ids == NextIds(
+      dimensionId = maxId("Dimensions", "DimensionId") + 1,
+      dimensionValueId = maxId("DimensionValues", "DimensionValueId") + 1,
+      indicatorId = maxId("Indicator", "IndicatorId") + 1,
+      indicatorValueId = maxId("IndicatorValues", "IndicatorValueId") + 1))
+    assert(ids.indicatorValueId == 7L)
+    val firstIndicators = catalog.readProduct("Indicator", unmatched)
+      .select("IndicatorId").as[Long].collect()
+    val secondIndicators = catalog.readProduct("Indicator", normal)
+      .select("IndicatorId").as[Long].collect()
+    assert(firstIndicators.nonEmpty &&
+      firstIndicators.max < secondIndicators.min)
+  }
 }

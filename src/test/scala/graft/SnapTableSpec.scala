@@ -53,6 +53,28 @@ class SnapTableSpec extends AnyFunSuite {
     assert(SnapTable.read(spark, root).count() == 9)
   }
 
+  test("a concurrent reader never sees a claimed manifest without its bytes") {
+    val dir = freshRoot()
+    val body = ("action=append\n" * 512).getBytes("UTF-8")
+    @volatile var done = false
+    val partial = new java.util.concurrent.atomic.AtomicInteger(0)
+    val readers = (1 to 3).map(_ => new Thread(() =>
+      while (!done) graft.io.SnapIo.listNames(dir)
+        .filter(_.endsWith(".manifest")).foreach { n =>
+          val got = graft.io.SnapIo.readBytes(graft.io.SnapIo.child(dir, n))
+          if (got.length != body.length) partial.incrementAndGet()
+        }))
+    readers.foreach(_.start())
+    (1 to 500).foreach(i => graft.io.SnapIo.createNew(
+      graft.io.SnapIo.child(dir, f"v$i%05d.manifest"), body))
+    done = true
+    readers.foreach(_.join())
+    assert(partial.get == 0, s"${partial.get} partial manifest reads")
+    intercept[java.nio.file.FileAlreadyExistsException](graft.io.SnapIo
+      .createNew(graft.io.SnapIo.child(dir, "v00001.manifest"), Array[Byte](1)))
+    assert(graft.io.SnapIo.listNames(dir).size == 500, "no claim file left")
+  }
+
   test("manifest min/max skipping opens only overlapping files, result exact") {
     val root = freshRoot()
     Seq((1L, 100L), (101L, 200L), (201L, 300L)).foreach { case (a, b) =>
@@ -909,11 +931,11 @@ class SnapTableSpec extends AnyFunSuite {
     assert(StrStat.safeUpper(Array(0x61.toByte, 0xff.toByte))
       .map(_.toSeq).contains(Seq(0x62.toByte)))
     assert(StrStat.safeUpper(Array(0xff.toByte, 0xff.toByte)).isEmpty)
-    // prefixOf truncates at the byte cap and flags it
+    // prefixOfBytes truncates at the byte cap and flags it
     val long = "x" * 100
-    val (p, t) = StrStat.prefixOf(long)
+    val (p, t) = StrStat.prefixOfBytes(b(long))
     assert(t && StrStat.dec(p).length == StrStat.maxLen)
-    val (q, u) = StrStat.prefixOf("short")
+    val (q, u) = StrStat.prefixOfBytes(b("short"))
     assert(!u && new String(StrStat.dec(q), "UTF-8") == "short")
   }
 
