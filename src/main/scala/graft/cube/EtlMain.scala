@@ -152,7 +152,8 @@ object EtlMain {
     out.toSeq.sortBy(_._1).foreach { case (pid, t) =>
       // values count from the parquet just written (metadata read) —
       // the in-memory frame's caches were already released by runGroup
-      // and a count() on it would re-run the whole fact pipeline
+      // and a count() on it would re-run the whole fact pipeline; the
+      // warnings are a local frame collected while the product ran
       println(s"[graft-etl] product $pid loaded: " +
         s"${catalog.readProduct("IndicatorValues", pid).count()} values, " +
         s"${t.dguidWarnings.count()} unmatched DGUIDs")

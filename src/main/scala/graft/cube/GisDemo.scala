@@ -59,7 +59,7 @@ object GisDemo {
       csv = csv,
       geoRef = Seq("2021A000011124", "2016A000235").toDF("GeographyReferenceId"),
       nullReasons = Seq((1, "x"), (2, "F")).toDF("NullReasonId", "Symbol"),
-      existingMeta = None, existingGeoLevels = None, existingDateValues = None,
+      existingMeta = None, existingGeoLevels = None, existingDates = Nil,
       defaults = ProductDefaults(1, "default", 1, "#FFFFFF", "#000000", 2),
       ids = NextIds())
 

@@ -2,9 +2,10 @@ package graft.cube
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The 9 output frames of one product load (target star schema,
   * SURVEY.md §1.1; insert column orders match the reference's insert
@@ -20,11 +21,14 @@ final case class GisTables(
     geographicLevelForIndicator: DataFrame,
     indicatorMetaData: DataFrame,
     relatedCharts: DataFrame,
+    /** Unmatched DGUIDs, collected while the product ran: a local frame. */
     dguidWarnings: DataFrame,
+    /** The product's new Date-dimension values: a local frame. */
     dateDimensionValues: DataFrame,
     /** Frames [[GisPipeline.run]] persisted for this product (prepared
-      * CSV, id-frozen values). Callers unpersist after the tables are
-      * materialized — ProductRunner does so after each catalog write.
+      * CSV, id-frozen values, a master's indicator frame). Callers
+      * unpersist after the tables are materialized — ProductRunner does
+      * so after each catalog write.
       */
     cached: Seq[DataFrame] = Nil)
 
@@ -36,7 +40,7 @@ final case class PipelineInputs(
     nullReasons: DataFrame, // [NullReasonId, Symbol]
     existingMeta: Option[DataFrame], // preserved chart metadata (scdb.py:128-137)
     existingGeoLevels: Option[DataFrame], // [IndicatorIdExist, GeographicLevelIdExist]
-    existingDateValues: Option[DataFrame], // [Display_EN, DimensionId]
+    existingDates: Seq[String], // Display_EN of the Date values the group already holds
     defaults: ProductDefaults,
     ids: NextIds,
     minRefYear: Option[Int] = None,
@@ -89,15 +93,20 @@ object GisPipeline {
     }
   }
 
-  /** Mixed-geo justice row filter (dfhandler.py:434-443, F2). */
-  private def justiceGeoFilter(df: DataFrame, pid: Long, isSibling: Boolean): DataFrame =
-    if (!mixedGeoJusticePids.contains(pid)) df
+  /** Mixed-geo justice row predicate (dfhandler.py:434-443, F2); None
+    * keeps every row.
+    */
+  private def justiceKeep(pid: Long, isSibling: Boolean): Option[Column] =
+    if (!mixedGeoJusticePids.contains(pid)) None
     else {
       val core = Seq("A0000", "A0001", "A0002")
-      val kept = df.filter(!(col("RefYear").cast("int") < 2017 &&
-        !col("GeographicLevelId").isin(core: _*)))
-      if (isSibling) kept.filter(!col("GeographicLevelId").isin(core: _*)) else kept
+      val kept = !(col("RefYear").cast("int") < 2017 &&
+        !col("GeographicLevelId").isin(core: _*))
+      Some(if (isSibling) kept && !col("GeographicLevelId").isin(core: _*) else kept)
     }
+
+  private def justiceGeoFilter(df: DataFrame, pid: Long, isSibling: Boolean): DataFrame =
+    justiceKeep(pid, isSibling).fold(df)(df.filter)
 
   /** gis.IndicatorValues (dfhandler.py:430-462). Ids are assigned
     * before the FK-validation join, as in the reference (dropped rows
@@ -122,30 +131,50 @@ object GisPipeline {
       .select("IndicatorValueId", "VALUE", "NullReasonId", "IndicatorValueCode")
   }
 
-  /** gis.GeographyReferenceForIndicator (dfhandler.py:185-207) + the
-    * unmatched-DGUID warning frame (dfhandler.py:556-559, 694-705).
+  /** gis.GeographyReferenceForIndicator (dfhandler.py:185-207).
     * `prepared` must already be justice-geo-filtered: the reference
-    * builds both frames after the mixed-geo drop (main.py:219-222), so
-    * warnings never inspect rows that filter removed.
+    * builds it after the mixed-geo drop (main.py:219-222).
     */
   def buildGeoRefForIndicator(prepared: DataFrame, indicators: DataFrame,
-      geoRef: DataFrame, indicatorValues: DataFrame): (DataFrame, DataFrame) = {
+      geoRef: DataFrame, indicatorValues: DataFrame): DataFrame = {
     val base = prepared.select("DGUID", "IndicatorCode", "ReferencePeriod")
       .join(broadcast(indicators.select("IndicatorCode", "IndicatorId")),
         Seq("IndicatorCode"), "left")
       .withColumn("IndicatorValueCode",
         CubeOps.indicatorValueCode(col("DGUID"), col("IndicatorCode")))
-    val warnings = base
-      .join(broadcast(geoRef), base("DGUID") === geoRef("GeographyReferenceId"), "left_anti")
-      .select("DGUID").na.drop().distinct()
-    val out = base
+    base
       .join(broadcast(geoRef), base("DGUID") === geoRef("GeographyReferenceId"), "left_semi")
       .join(indicatorValues.select("IndicatorValueCode", "IndicatorValueId"),
         Seq("IndicatorValueCode"), "left")
       .na.drop(Seq("IndicatorId", "IndicatorValueId"))
       .select(substring(col("DGUID"), 1, 25).as("GeographyReferenceId"),
         col("IndicatorId"), col("IndicatorValueId"), col("ReferencePeriod"))
-    (out, warnings)
+  }
+
+  /** Spark's ascending string order: UTF-8 bytes, nulls first. */
+  private[cube] val sparkStringOrder: Ordering[String] = (a: String, b: String) =>
+    if (a == null || b == null) java.lang.Boolean.compare(b == null, a == null)
+    else UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
+  /** The driver-side facts of one product, from one pass over its
+    * prepared rows: the distinct trimmed REF_DATEs (null included), and
+    * the unmatched-DGUID warnings (dfhandler.py:556-559, 694-705) —
+    * distinct non-null DGUIDs missing from the geography reference,
+    * among the rows `keep` leaves (the reference warns after the
+    * mixed-geo drop, main.py:219-222). Both come back sorted.
+    */
+  def fileFacts(prepared: DataFrame, geoRef: DataFrame,
+      keep: Option[Column]): (Seq[String], Seq[String]) = {
+    val unmatched = col("__geoRef").isNull && keep.getOrElse(lit(true))
+    val row = prepared
+      .join(broadcast(geoRef.select(col("GeographyReferenceId").as("__geoRef"))),
+        col("DGUID") === col("__geoRef"), "left")
+      .agg(collect_set(trim(col("REF_DATE"))), max(col("REF_DATE").isNull),
+        collect_set(when(unmatched, col("DGUID"))))
+      .head()
+    val nullDate = !row.isNullAt(1) && row.getBoolean(1)
+    val dates = row.getSeq[String](0) ++ (if (nullDate) Seq(null) else Nil)
+    (dates.sorted(sparkStringOrder), row.getSeq[String](2).sorted(sparkStringOrder))
   }
 
   /** gis.GeographicLevelForIndicator (dfhandler.py:143-182): distinct
@@ -155,15 +184,10 @@ object GisPipeline {
     */
   def buildGeoLevelForIndicator(prepared: DataFrame, indicators: DataFrame,
       pid: Long, existing: Option[DataFrame], isSibling: Boolean): DataFrame = {
-    val chunk = {
-      val g = prepared.select("RefYear", "GeographicLevelId", "IndicatorCode")
-      val filtered = if (mixedGeoJusticePids.contains(pid))
-        g.filter(!(col("RefYear").cast("int") < 2017 &&
-          !col("GeographicLevelId").isin("A0000", "A0001", "A0002")))
-      else g
-      filtered.drop("RefYear")
-    }
-    val mapped = chunk
+    // the mixed-geo justice drop, without the sibling core-level drop
+    val mapped = justiceGeoFilter(
+      prepared.select("RefYear", "GeographicLevelId", "IndicatorCode"), pid, isSibling = false)
+      .drop("RefYear")
       .withColumn("GeographicLevelId", CubeOps.caToCma(col("GeographicLevelId")))
       .distinct()
       .join(broadcast(indicators.select("IndicatorCode", "IndicatorId")),
@@ -177,11 +201,23 @@ object GisPipeline {
           mapped("GeographicLevelId") === ex("GeographicLevelIdExist"),
         "left_anti")
     }
-    val withWeb = if (isSibling) newRows
-    else newRows.unionByName(
-      newRows.select("IndicatorId").distinct()
-        .withColumn("GeographicLevelId", lit("SSSS")))
-    withWeb.select("IndicatorId", "GeographicLevelId")
+    // one pass over newRows: each indicator's pairs, then its web row
+    if (isSibling) newRows.select("IndicatorId", "GeographicLevelId")
+    else newRows.groupBy("IndicatorId")
+      .agg(collect_list("GeographicLevelId").as("__levels"))
+      .select(col("IndicatorId"),
+        explode(concat(col("__levels"), array(lit("SSSS")))).as("GeographicLevelId"))
+  }
+
+  /** The rows of [[buildDimensions]]. */
+  private def dimensionRows(meta: CubeMetadata,
+      nextDimId: Long): Seq[(Long, Long, String, String, Long, String)] = {
+    val names = ("Date", "Date") +: meta.dimensions.map(d => (d.nameEn, d.nameFr))
+    val n = names.size
+    names.zipWithIndex.map { case ((en, fr), i) =>
+      (nextDimId + i, meta.productId, en, fr, i + 1L,
+        if (i == n - 1) "Value" else "Filter")
+    }
   }
 
   /** gis.Dimensions (dfhandler.py:26-40): synthetic Date dimension
@@ -190,61 +226,59 @@ object GisPipeline {
   def buildDimensions(spark: SparkSession, meta: CubeMetadata,
       nextDimId: Long): DataFrame = {
     import spark.implicits._
-    val names = ("Date", "Date") +: meta.dimensions.map(d => (d.nameEn, d.nameFr))
-    val n = names.size
-    names.zipWithIndex.map { case ((en, fr), i) =>
-      (nextDimId + i, meta.productId, en, fr, i + 1L,
-        if (i == n - 1) "Value" else "Filter")
-    }.toDF("DimensionId", "IndicatorThemeId", "Dimension_EN", "Dimension_FR",
-      "DisplayOrder", "DimensionType")
+    dimensionRows(meta, nextDimId).toDF("DimensionId", "IndicatorThemeId",
+      "Dimension_EN", "Dimension_FR", "DisplayOrder", "DimensionType")
   }
 
   /** gis.DimensionValues (dfhandler.py:94-110): flatten members, drop
     * Geography, FK to dimension ids, per-dimension display order with
-    * zero-padded prefix, 255-char caps.
+    * zero-padded prefix, 255-char caps. Numbered on the driver: ids in
+    * (positionId, memberId) order, then the Dimension_EN name join —
+    * a name no dimension carries keeps a null DimensionId, a name
+    * several carry ("Date", or a repeated name) yields a row for each —
+    * then display orders per DimensionId in the same order.
     */
   def buildDimensionValues(spark: SparkSession, meta: CubeMetadata,
-      dimensions: DataFrame, nextDimValId: Long): DataFrame = {
+      nextDimId: Long, nextDimValId: Long): DataFrame = {
     import spark.implicits._
-    val flat = meta.dimensions.flatMap { d =>
-      d.members.map(m => (d.positionId, d.nameEn, m.memberId, m.nameEn, m.nameFr))
-    }.toDF("DimPosId", "DimNameEn", "MemberId", "Display_EN", "Display_FR")
-    val nonGeo = flat.filter(lower(col("DimNameEn")) =!= "geography")
-      .withColumn("DimensionValueId",
-        row_number().over(Window.orderBy("DimPosId", "MemberId")) + lit(nextDimValId - 1))
-      .join(broadcast(dimensions.select(col("Dimension_EN"), col("DimensionId"))),
-        col("DimNameEn") === col("Dimension_EN"), "left")
-    val w = Window.partitionBy("DimensionId").orderBy("DimPosId", "MemberId")
-    nonGeo
-      .withColumn("ValueDisplayOrder", row_number().over(w).cast("long"))
-      .withColumn("Display_EN",
-        substring(concat(CubeOps.memberPrefix(col("ValueDisplayOrder")), col("Display_EN")), 1, 255))
-      .withColumn("Display_FR",
-        substring(concat(CubeOps.memberPrefix(col("ValueDisplayOrder")), col("Display_FR")), 1, 255))
-      .select("DimensionValueId", "DimensionId", "Display_EN", "Display_FR",
-        "ValueDisplayOrder")
+    val dimIdsByName = dimensionRows(meta, nextDimId)
+      .filter(_._3 != null).groupMap(_._3)(r => Option(r._1))
+    // nonGeoDimensions drops exactly the names whose lower case is
+    // "geography" (only ASCII letters lower-case to those letters)
+    val numbered = meta.nonGeoDimensions
+      .flatMap(d => d.members.map(m => (d, m)))
+      .sortBy { case (d, m) => (d.positionId, m.memberId) }
+      .zipWithIndex
+      .flatMap { case ((d, m), i) =>
+        dimIdsByName.getOrElse(d.nameEn, Seq(None)).map(dimId => (nextDimValId + i, dimId, m))
+      }
+    // groupBy keeps numbered's id order within each DimensionId
+    val rows = numbered.groupBy(_._2).values.toSeq.flatMap(_.zipWithIndex.map {
+      case ((id, dimId, m), ord) => (id, dimId, m.nameEn, m.nameFr, ord + 1L)
+    })
+    rows.toDF("DimensionValueId", "DimensionId", "__en", "__fr", "ValueDisplayOrder")
+      .select(col("DimensionValueId"), col("DimensionId"),
+        substring(concat(CubeOps.memberPrefix(col("ValueDisplayOrder")), col("__en")), 1, 255)
+          .as("Display_EN"),
+        substring(concat(CubeOps.memberPrefix(col("ValueDisplayOrder")), col("__fr")), 1, 255)
+          .as("Display_FR"),
+        col("ValueDisplayOrder"))
   }
 
-  /** New date-dimension values: distinct file REF_DATEs not already
-    * present (dfhandler.py:114-134, J2 anti-join), ids/order continuing
-    * from the current maxima.
+  /** New date-dimension values: the file's distinct trimmed REF_DATEs
+    * (see [[fileFacts]]) not already among `existing` (dfhandler.py:114-134,
+    * J2 anti-join; a null date never matches), ids and display orders
+    * continuing from the watermarks in Spark's date-string order.
     */
-  def buildDateDimensionValues(prepared: DataFrame, existing: Option[DataFrame],
-      dateDimId: Long, nextDimValId: Long, nextOrder: Long): DataFrame = {
-    val fileDates = prepared.select(trim(col("REF_DATE")).as("REF_DATE")).distinct()
-    val newDates = existing.fold(fileDates) { ex =>
-      fileDates.join(broadcast(ex),
-        fileDates("REF_DATE") === trim(ex("Display_EN")), "left_anti")
-    }
-    val w = Window.orderBy("REF_DATE")
-    newDates
-      .withColumn("DimensionValueId", row_number().over(w) + lit(nextDimValId - 1))
-      .withColumn("DimensionId", lit(dateDimId))
-      .withColumn("Display_EN", col("REF_DATE"))
-      .withColumn("Display_FR", col("REF_DATE"))
-      .withColumn("ValueDisplayOrder", row_number().over(w) + lit(nextOrder - 1))
-      .select("DimensionValueId", "DimensionId", "Display_EN", "Display_FR",
-        "ValueDisplayOrder")
+  def buildDateDimensionValues(spark: SparkSession, fileDates: Seq[String],
+      existing: Seq[String], dateDimId: Long, nextDimValId: Long,
+      nextOrder: Long): DataFrame = {
+    import spark.implicits._
+    val known = existing.filter(_ != null).toSet
+    fileDates.filterNot(known).sorted(sparkStringOrder).zipWithIndex.map { case (d, i) =>
+      (nextDimValId + i, dateDimId, d, d, nextOrder + i)
+    }.toDF("DimensionValueId", "DimensionId", "Display_EN", "Display_FR",
+      "ValueDisplayOrder")
   }
 
   /** gis.IndicatorTheme (dfhandler.py:380-427): the product row plus
@@ -293,22 +327,25 @@ object GisPipeline {
 
   /** Dimension-unique-key combos (dfhandler.py:43-72): ordered cross
     * product over *stored* dimension values (Date dimension included),
-    * keyed by stripped display names ↔ concatenated value ids.
+    * keyed by stripped display names ↔ concatenated value ids. The
+    * inputs are local frames, so grouping the values per dimension
+    * runs on the driver; only the cross product is a Spark plan.
     */
   def dimensionUniqueKeys(dimensions: DataFrame, dimensionValues: DataFrame,
       dateValues: DataFrame): DataFrame = {
-    val allValues = dimensionValues.unionByName(dateValues)
-    val dimOrder = dimensions.select("DimensionId", "DisplayOrder")
-    val joined = allValues.join(broadcast(dimOrder), Seq("DimensionId"))
-      .withColumn("name", CubeOps.stripSortPrefix(col("Display_EN")))
-    val dimIds = joined.select("DimensionId", "DisplayOrder").distinct()
-      .orderBy("DisplayOrder").collect().map(_.getLong(0))
-    val perDim = dimIds.zipWithIndex.map { case (id, i) =>
-      joined.filter(col("DimensionId") === id)
-        .select(col("name").as(s"n_$i"), col("DimensionValueId").as(s"k_$i"))
-    }
+    val spark = dimensions.sparkSession
+    import spark.implicits._
+    val displayOrder = dimensions.select("DimensionId", "DisplayOrder").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val named = Seq(dimensionValues, dateValues).flatMap(_.select(col("DimensionId"),
+      CubeOps.stripSortPrefix(col("Display_EN")), col("DimensionValueId")).collect())
+      .filter(r => !r.isNullAt(0) && displayOrder.contains(r.getLong(0)))
+    val perDim = named.groupBy(_.getLong(0)).toSeq.sortBy { case (id, _) => displayOrder(id) }
+      .zipWithIndex.map { case ((_, rows), i) =>
+        rows.map(r => (r.getString(1), r.getLong(2))).toDF(s"n_$i", s"k_$i")
+      }
     val crossed = perDim.reduce(_ crossJoin _)
-    val n = dimIds.length
+    val n = perDim.length
     crossed.select(
       concat_ws("-", (0 until n).map(i => col(s"n_$i")): _*).as("IndicatorFmt"),
       concat_ws("-", (0 until n).map(i => col(s"k_$i")): _*).as("DimensionUniqueKey"))
@@ -445,6 +482,7 @@ object GisPipeline {
       uomCodeset: Map[Int, (String, String)] = Map.empty,
       subjectCodeset: Seq[(String, String, String)] = Nil,
       refDates: Seq[LocalDate] = Nil): GisTables = {
+    import spark.implicits._
     val meta = in.meta
     val dates = if (refDates.nonEmpty) refDates
       else RefDates.generate(meta.startDate, meta.endDate, meta.frequencyCode)
@@ -458,12 +496,16 @@ object GisPipeline {
       needParentShort = in.themeNeeds.parentShort,
       needDummyShort = in.themeNeeds.dummyShort)
     val dims = buildDimensions(spark, meta, in.ids.dimensionId)
-    val dimValues = buildDimensionValues(spark, meta, dims, in.ids.dimensionValueId)
+    val dimValues = buildDimensionValues(spark, meta, in.ids.dimensionId,
+      in.ids.dimensionValueId)
 
-    // Sibling products reuse the master's indicator rows (main.py:166-170).
-    val indicators = in.masterIndicators.getOrElse(
-      IndicatorBuilder.build(spark, meta, dates, uomCodeset,
-        in.ids.indicatorId, in.minRefYear, mixedGeoJusticePids))
+    // Sibling products reuse the master's indicator rows
+    // (main.py:166-170). A master's frame is persisted: it feeds
+    // Indicator, IndicatorMetaData, RelatedCharts, GRFI and GLI
+    val built = if (in.masterIndicators.isDefined) None
+      else Some(IndicatorBuilder.build(spark, meta, dates, uomCodeset,
+        in.ids.indicatorId, in.minRefYear, mixedGeoJusticePids).persist())
+    val indicators = in.masterIndicators.orElse(built).get
 
     // persisted so every consumer (the values write, the GRFI join)
     // sees ONE materialization of the dense-id assignment; unpersisted
@@ -474,8 +516,9 @@ object GisPipeline {
     // mixed-geo justice drop (main.py:219-222) — warnings must not
     // inspect rows that filter removed
     val justiced = justiceGeoFilter(prepared, fpid, in.isSibling)
-    val (gri, warnings) = buildGeoRefForIndicator(justiced, indicators,
-      in.geoRef, values)
+    val gri = buildGeoRefForIndicator(justiced, indicators, in.geoRef, values)
+    val (fileDates, warnings) = fileFacts(prepared, in.geoRef,
+      justiceKeep(fpid, in.isSibling))
     val gli = buildGeoLevelForIndicator(prepared, indicators, fpid,
       in.existingGeoLevels, in.isSibling)
 
@@ -488,11 +531,11 @@ object GisPipeline {
     // Date dimension is first for a master; siblings attach to the
     // master's Date dimension id (get_date_dimension_id, scdb.py:108-114)
     val dateDimId = in.dateDimensionId.getOrElse(in.ids.dimensionId)
-    val dateValues = buildDateDimensionValues(prepared, in.existingDateValues,
+    val dateValues = buildDateDimensionValues(spark, fileDates, in.existingDates,
       dateDimId, nextDimValAfter, in.nextDateValueOrder)
 
     // unique-key matching feeds only metadata/charts, which siblings
-    // skip — don't pay its collect + crossJoin on sibling runs
+    // skip — don't pay its crossJoin on sibling runs
     val (metaData, related) =
       if (in.isSibling) (spark.emptyDataFrame, spark.emptyDataFrame)
       else {
@@ -505,7 +548,7 @@ object GisPipeline {
     // table (main.py:246-259)
     GisTables(theme, dims, dimValues.unionByName(dateValues),
       IndicatorBuilder.insertSubset(indicators),
-      values, gri, gli, metaData, related, warnings, dateValues,
-      cached = Seq(prepared, values))
+      values, gri, gli, metaData, related, warnings.toDF("DGUID"), dateValues,
+      cached = Seq(prepared, values) ++ built)
   }
 }

@@ -18,9 +18,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale note: per-dimension member frames are tiny (10s of rows);
   * the crossJoin chain is broadcast-nested-loop over literal-sized
-  * inputs, and id assignment goes through
-  * [[graft.ops.Ids.distributedDenseIds]] — range partition +
-  * per-partition numbering, no single-partition global window.
+  * inputs, and each IndicatorId is a column expression over the row's
+  * date position and member ranks — no sort, shuffle or numbering
+  * job. That is exact because the frame is always the complete
+  * (kept dates × member combos) grid, so a row's dense rank in
+  * (date, member ranks) order is its mixed-radix number.
   */
 object IndicatorBuilder {
 
@@ -54,6 +56,21 @@ object IndicatorBuilder {
         (0 until n).map(i => col(s"__ord_$i"))): _*)
   }
 
+  /** Reference dates the min-year gate keeps
+    * (copy_data_frames_for_date_range, dfhandler.py:562-580); justice
+    * products keep every date.
+    */
+  private def keptDates(meta: CubeMetadata, refDates: Seq[LocalDate],
+      minRefYear: Option[Int], justicePids: Set[Long]): Seq[LocalDate] =
+    refDates.filter(d =>
+      minRefYear.forall(y => d.getYear >= y) || justicePids.contains(meta.productId))
+
+  /** Rows (and ids) [[build]] gives out: kept dates × Π member counts. */
+  def gridSize(meta: CubeMetadata, refDates: Seq[LocalDate],
+      minRefYear: Option[Int], justicePids: Set[Long]): Long =
+    keptDates(meta, refDates, minRefYear, justicePids).size.toLong *
+      meta.nonGeoDimensions.map(_.members.size.toLong).product
+
   /** Full gis.Indicator frame for one product (master/single path). */
   def build(spark: SparkSession, meta: CubeMetadata,
       refDates: Seq[LocalDate], uomCodeset: Map[Int, (String, String)],
@@ -63,21 +80,28 @@ object IndicatorBuilder {
     val combos = memberCombos(spark, meta)
     val nOrd = meta.nonGeoDimensions.size
 
-    // J15: × reference dates, with the min-year gate of
-    // copy_data_frames_for_date_range (dfhandler.py:562-580).
-    val keptDates = refDates.zipWithIndex.filter { case (d, _) =>
-      minRefYear.forall(y => d.getYear >= y) || justicePids.contains(meta.productId)
+    // J15: × reference dates, with the min-year gate
+    val dates = keptDates(meta, refDates, minRefYear, justicePids).zipWithIndex
+      .map { case (d, i) => (d.toString, i.toLong) }
+      .toDF("__refDateStr", "__datePos")
+
+    // IndicatorId = nextId + the row's dense rank in (date, member
+    // ranks) order. Every (kept date, combo) pair has exactly one row —
+    // the uom join below is a left join on a unique key — so that rank
+    // is datePos·Π|Mᵢ| + Σ ordᵢ·Π_{j>i}|Mⱼ|, the member order being
+    // memberCombos' positionId order
+    val strides = meta.nonGeoDimensions.sortBy(_.positionId)
+      .map(_.members.size.toLong).scanRight(1L)(_ * _)
+    val indicatorId = (0 until nOrd).foldLeft(
+      lit(nextId) + col("__datePos") * strides.head) { (id, i) =>
+      id + col(s"__ord_$i") * strides(i + 1)
     }
-    val dates = keptDates
-      .map { case (d, i) => (d.toString, i) }
-      .toDF("__refDateStr", "__dateIdx")
 
     val pid = meta.productId.toString
-    val idOrderCols = "__dateIdx" +: (0 until nOrd).map(i => s"__ord_$i")
     val uomDf = uomCodeset.toSeq.map { case (k, (en, fr)) => (k, en, fr) }
       .toDF("__uom_code", "UOM_EN", "UOM_FR")
 
-    val framed = combos.crossJoin(broadcast(dates))
+    combos.crossJoin(broadcast(dates))
       .withColumn("RefYear", substring(col("__refDateStr"), 1, 4))
       .withColumn("ReferencePeriod", to_timestamp(col("__refDateStr")))
       .withColumn("IndicatorCode",
@@ -102,10 +126,8 @@ object IndicatorBuilder {
       .withColumn("IndicatorThemeID", lit(meta.productId))
       .withColumn("ReleaseIndicatorDate", to_timestamp(lit(meta.releaseTime)))
       .withColumn("Vector", lit(null).cast("int"))
-    // Dense id assignment over (dateIdx, member ords) without a
-    // single-partition window — same ids, distributed plan.
-    graft.ops.Ids.distributedDenseIds(framed, "IndicatorId", nextId, idOrderCols)
-      .drop((Seq("__refDateStr", "__dateIdx", "__uom_code") ++
+      .withColumn("IndicatorId", indicatorId)
+      .drop((Seq("__refDateStr", "__datePos", "__uom_code") ++
         (0 until nOrd).map(i => s"__ord_$i")): _*)
   }
 

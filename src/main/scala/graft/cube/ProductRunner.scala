@@ -51,7 +51,7 @@ object ProductRunner {
     }
 
   /** Current id watermarks across the whole catalog (the reference's
-    * per-insert MAX probes, run once per product).
+    * per-insert MAX probes). [[runGroup]] runs it once, at group start.
     */
   def nextIds(catalog: ParquetCatalog): NextIds = NextIds(
     dimensionId = nextIdFrom(catalog, "Dimensions", "DimensionId", 1L),
@@ -107,8 +107,10 @@ object ProductRunner {
 
   /** One product group end-to-end: master (or single) first, then each
     * sibling reusing the master's indicator frame and pid, writing
-    * every table through the catalog's per-product overwrite. Id
-    * watermarks advance between products from the written tables.
+    * every table through the catalog's per-product overwrite. The
+    * catalog is probed for id watermarks once, at group start; between
+    * products they advance by what the product just wrote (see
+    * [[advance]]).
     */
   def runGroup(spark: SparkSession, catalog: ParquetCatalog,
       masterPid: Long,
@@ -138,13 +140,14 @@ object ProductRunner {
       math.max(ids.dimensionValueId, onDisk.dimensionValueId),
       math.max(ids.indicatorId, onDisk.indicatorId),
       math.max(ids.indicatorValueId, onDisk.indicatorValueId))
-    var masterDateDimId = watermarks.dimensionId // master's Date dim is created first
+    val masterDateDimId = watermarks.dimensionId // master's Date dim is created first
     var dateOrderNext = 1L
     // accumulated date-dimension values across the group: each product
     // anti-joins against ALL dates inserted so far (the reference
     // re-probes the DB per product, main.py:246-254), so a second
     // sibling cannot re-insert a date the first sibling added
-    var knownDates: Option[DataFrame] = None
+    var knownDates = Seq.empty[String]
+    val lastLoaded = order.lastIndexWhere(products.contains)
     val out = order.zipWithIndex.flatMap { case (pid, i) =>
       products.get(pid).map { case (meta, csv) =>
         val isSibling = i > 0
@@ -157,7 +160,7 @@ object ProductRunner {
           existingGeoLevels = knownGli.map(g =>
             g.select(col("IndicatorId").as("IndicatorIdExist"),
               col("GeographicLevelId").as("GeographicLevelIdExist"))),
-          existingDateValues = knownDates.map(_.select("Display_EN", "DimensionId")),
+          existingDates = knownDates,
           defaults = defaults, ids = watermarks,
           minRefYear = minRefYear,
           isSibling = isSibling,
@@ -167,34 +170,56 @@ object ProductRunner {
           nextDateValueOrder = dateOrderNext,
           themeNeeds = if (isSibling) ThemeNeeds() else themeNeeds(catalog, meta))
         val tables = GisPipeline.run(spark, in, uomCodeset, subjectCodeset)
-        if (!isSibling) {
-          masterDateDimId = watermarks.dimensionId
-          masterIndicators = Some(tables.indicator)
-        }
+        if (!isSibling) masterIndicators = Some(tables.indicator)
         // persisted BEFORE the write so the write action populates the
-        // cache, freezing these frames for later siblings' anti-joins
+        // cache, freezing this frame for later siblings' anti-joins
         val gliNew = tables.geographicLevelForIndicator.persist()
-        val dv = tables.dateDimensionValues.persist()
         persisted += gliNew
-        persisted += dv
         write(catalog, pid, tables, isSibling)
         // fold this product's new geo-level rows into the running set
         knownGli = Some(knownGli.fold(gliNew)(_.unionByName(gliNew)))
-        // fold this product's new dates into the running set and
-        // advance the display-order watermark past them
-        knownDates = Some(knownDates.fold(dv)(_.unionByName(dv)))
-        dateOrderNext = knownDates.get
-          .agg(coalesce(max("ValueDisplayOrder"), lit(0L))).head().getLong(0) + 1
-        // advance id watermarks from what is now on disk (MAX+1 probes)
-        watermarks = nextIds(catalog)
-        // per-product caches (prepared CSV, id-frozen values) are no
-        // longer needed once the product's tables are on disk
+        // fold this product's new dates (a local frame) into the running
+        // set and advance the display-order watermark past them
+        val newDates = tables.dateDimensionValues.select("Display_EN").collect()
+          .map(_.getString(0)).toSeq
+        knownDates ++= newDates
+        dateOrderNext += newDates.size
+        if (i < lastLoaded)
+          watermarks = advance(watermarks, meta, tables, isSibling, newDates.size, minRefYear)
+        // per-product caches (prepared CSV, id-frozen values, indicator
+        // frame) are no longer needed once the product's tables are on disk
         tables.cached.foreach(_.unpersist())
         pid -> tables
       }
     }.toMap
     persisted.foreach(_.unpersist())
     out
+  }
+
+  /** The watermarks after one product, from what it wrote — equal to
+    * the catalog's MAX+1 probes without re-reading it:
+    *  - a master wrote 1 + |dimensions| Dimensions rows, one value per
+    *    non-geo member and the indicator grid, all from the watermarks;
+    *  - every product wrote its new dates after its member values;
+    *  - the values' ids are dense over the rows BEFORE the FK join, so
+    *    their MAX+1 comes from the persisted written frame, not a count.
+    * A sibling may delete stale standalone Dimensions or Indicator
+    * partitions, but siblings use only the dimension-value and value
+    * watermarks, and the next group probes the catalog again.
+    */
+  private def advance(ids: NextIds, meta: CubeMetadata, t: GisTables,
+      isSibling: Boolean, newDates: Int, minRefYear: Option[Int]): NextIds = {
+    val maxValue = t.indicatorValues.agg(max(col("IndicatorValueId"))).head()
+    def ifMaster(n: => Long): Long = if (isSibling) 0L else n
+    NextIds(
+      dimensionId = ids.dimensionId + ifMaster(1 + meta.dimensions.size),
+      dimensionValueId = ids.dimensionValueId + newDates +
+        ifMaster(meta.nonGeoDimensions.map(_.members.size).sum),
+      indicatorId = ids.indicatorId + ifMaster(IndicatorBuilder.gridSize(meta,
+        RefDates.generate(meta.startDate, meta.endDate, meta.frequencyCode),
+        minRefYear, GisPipeline.mixedGeoJusticePids)),
+      indicatorValueId =
+        if (maxValue.isNullAt(0)) ids.indicatorValueId else maxValue.getLong(0) + 1)
   }
 
   private def write(catalog: ParquetCatalog, pid: Long,

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.LongType
   * small control-plane frames, wrong for a 100 TB fact table.
   *
   * [[distributedDenseIds]] is the scale path — and the one the
-  * pipeline uses for both fact-value and indicator ids: range-partition
+  * pipeline uses for fact-value ids: range-partition
   * by the ordering key, sort within partitions, then zipWithIndex
   * (count-per-partition job + offset map — the standard distributed
   * dense-numbering scheme). Ids are identical to the global window's.
@@ -39,7 +39,8 @@ object Ids {
     * per-partition count). For the id→row mapping to be stable across
     * re-evaluations of the RESULT, either `orderCols` must be a total
     * order (the pipeline's call sites are) or the caller should persist
-    * the result — GisPipeline.run does, unpersisting after the write.
+    * the result — GisPipeline.run persists its values frame, and
+    * ProductRunner unpersists it after the write.
     */
   def distributedDenseIds(df: DataFrame, idName: String, startId: Long,
       orderCols: Seq[String], numPartitions: Int = 0): DataFrame = {

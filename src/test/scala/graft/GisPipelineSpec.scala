@@ -40,6 +40,40 @@ class GisPipelineSpec extends AnyFunSuite {
     assert(disp == "<ul><li>2019<li>All ages<li>Count</li></ul>")
     val uom = ind.select("UOM_EN").distinct().as[String].collect().toSet
     assert(uom == Set("Number"))
+
+    // ids are the dense rank over (date index, member ranks), from nextId:
+    // 3 non-geo dimensions with member ids out of order, a min year that
+    // drops the leading dates, and a justice pid that keeps every date
+    val members = Seq(Seq(5, 2, 9), Seq(3, 1), Seq(7, 4, 6, 1))
+    val dims = Dimension(1, "Geography", "G", hasUom = false,
+      Seq(Member(1, "Canada", "Canada", None))) +:
+      members.zipWithIndex.map { case (ms, i) =>
+        Dimension(i + 2, s"Dim$i", s"DimFr$i", hasUom = false,
+          ms.map(m => Member(m, s"m$i.$m", s"mf$i.$m", None)))
+      }
+    val dates = RefDates.generate(java.time.LocalDate.of(2017, 1, 1),
+      java.time.LocalDate.of(2021, 1, 1), 12)
+    val minYear = Some(2019)
+    val nextId = 41L
+    Seq(MiniCube.meta.productId -> 3, 35100002L -> 5).foreach { case (pid, keptDates) =>
+      val meta = MiniCube.meta.copy(productId = pid, dimensions = dims)
+      val built = IndicatorBuilder.build(spark, meta, dates, Map.empty, nextId,
+        minYear, GisPipeline.mixedGeoJusticePids)
+      val ranks = members.map(ms => ms.sorted.zipWithIndex.toMap)
+      val keyed = built.select("Coordinate", "IndicatorCode", "IndicatorId")
+        .as[(String, String, Long)].collect().toSeq.map { case (coord, code, id) =>
+          val ords = coord.split('.').map(_.toInt).zip(ranks).map { case (m, r) => r(m) }
+          (dates.map(_.toString).indexOf(code.split('.').last), ords(0), ords(1), ords(2), id)
+        }.toDF("dateIdx", "o0", "o1", "o2", "IndicatorId")
+      val expected = graft.ops.Ids.globalDenseIds(keyed, "expected", nextId,
+        Seq("dateIdx", "o0", "o1", "o2"))
+      assert(expected.filter($"expected" =!= $"IndicatorId").isEmpty, s"pid $pid")
+      val n = keptDates.toLong * members.map(_.size).product
+      assert(keyed.select("IndicatorId").as[Long].collect().sorted.toSeq ==
+        (nextId until nextId + n), s"pid $pid")
+      assert(IndicatorBuilder.gridSize(meta, dates, minYear,
+        GisPipeline.mixedGeoJusticePids) == n)
+    }
   }
 
   test("dimensions: Date first, last typed Value (dfhandler.py:26-40)") {

@@ -54,7 +54,7 @@ class MergedProductSpec extends AnyFunSuite {
       masterInd: Option[org.apache.spark.sql.DataFrame]) = PipelineInputs(
     meta = meta(pid), csv = justiceCsv(if (sibling) 2 else 1),
     geoRef = geoRef, nullReasons = nullReasons,
-    existingMeta = None, existingGeoLevels = None, existingDateValues = None,
+    existingMeta = None, existingGeoLevels = None, existingDates = Nil,
     defaults = defaults, ids = NextIds(),
     isSibling = sibling, masterIndicators = masterInd)
 
@@ -125,6 +125,51 @@ class MergedProductSpec extends AnyFunSuite {
     val warned = out.dguidWarnings.select("DGUID").as[String].collect().toSet
     assert(warned == Set("2018S9977001"),
       s"warnings must exclude rows dropped by the justice filter: $warned")
+  }
+
+  test("in-group watermarks equal the catalog's MAX+1 after each product (scdb.py:145-159)") {
+    // sibling 1 loads the mini cube, whose last value row in
+    // (IndicatorCode, DGUID) order has a DGUID missing from the geography
+    // reference: the FK join drops it after it used up an id. Sibling 2
+    // adds a 2022 row, so it writes a new date value
+    val masterPid = MiniCube.meta.productId
+    val (s1, s2) = (masterPid + 1, masterPid + 2)
+    val extra = Seq(("2022", "2021A000011124", "Number", 223.toShort, "v104", "1.1.1",
+      "", "", Option(2.0), "All ages", "Count"))
+      .toDF("REF_DATE", "DGUID", "UOM", "UOM_ID", "VECTOR", "COORDINATE",
+        "STATUS", "SYMBOL", "VALUE", "Age group", "Estimate")
+    val products = Map(
+      masterPid -> ((MiniCube.meta, MiniCube.csv(spark))),
+      s1 -> ((MiniCube.meta.copy(productId = s1), MiniCube.csv(spark))),
+      s2 -> ((MiniCube.meta.copy(productId = s2), MiniCube.csv(spark).union(extra))))
+    def load(pids: Set[Long]): graft.io.ParquetCatalog = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_watermarks").toString
+      val catalog = new graft.io.ParquetCatalog(spark, dir)
+      ProductRunner.runGroup(spark, catalog, masterPid,
+        products = products.filter { case (pid, _) => pids(pid) },
+        mergeConfig = Map(masterPid -> Seq(s1, s2)),
+        geoRef = MiniCube.geoRef(spark),
+        nullReasons = MiniCube.nullReasons(spark),
+        defaults = MiniCube.defaults,
+        uomCodeset = MiniCube.uomCodeset,
+        subjectCodeset = MiniCube.subjectCodeset)
+      catalog
+    }
+    def ids(df: org.apache.spark.sql.DataFrame, c: String): Seq[Long] =
+      df.select(c).as[Long].collect().toSeq
+    val afterS1 = load(Set(masterPid, s1))
+    val probedValueId = ids(afterS1.read("IndicatorValues"), "IndicatorValueId").max + 1
+    val probedDimValueId = ids(afterS1.read("DimensionValues"), "DimensionValueId").max + 1
+    val s1Ids = ids(afterS1.readProduct("IndicatorValues", s1), "IndicatorValueId")
+    val s1Rows = MiniCube.csv(spark).count()
+    assert(probedValueId != s1Ids.min + s1Rows,
+      "fixture: the dropped row must sort last, so MAX+1 is not nextId + row count")
+
+    val all = load(Set(masterPid, s1, s2))
+    assert(ids(all.readProduct("IndicatorValues", s2), "IndicatorValueId").min == probedValueId)
+    val s2Dates = all.readProduct("DimensionValues", s2)
+    assert(s2Dates.select("Display_EN").as[String].collect().toSeq == Seq("2022"))
+    assert(ids(s2Dates, "DimensionValueId") == Seq(probedDimValueId))
   }
 
   test("justice DGUID re-vintage applied in master values path") {

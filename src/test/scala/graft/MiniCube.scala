@@ -77,7 +77,7 @@ object MiniCube {
     nullReasons = nullReasons(spark),
     existingMeta = None,
     existingGeoLevels = None,
-    existingDateValues = None,
+    existingDates = Nil,
     defaults = defaults,
     ids = NextIds())
 }

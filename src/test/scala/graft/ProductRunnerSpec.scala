@@ -22,6 +22,75 @@ class ProductRunnerSpec extends AnyFunSuite {
     assert(skipped == Seq(100L, 101L))
   }
 
+  /** Spark jobs `body` starts, tagged through a thread-local property
+    * so jobs of anything else running in the JVM are not counted.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val key = "graft.test.jobTag"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty(key) == tag) {
+          jobs.incrementAndGet(); ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try {
+      body
+      // listener events arrive asynchronously: wait until the count settles
+      var (prev, quiet) = (-1, 0)
+      while (quiet < 3) {
+        Thread.sleep(200)
+        if (jobs.get() == prev) quiet += 1 else { prev = jobs.get(); quiet = 0 }
+      }
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get()
+  }
+
+  private def runMiniGroup(catalog: ParquetCatalog): Map[Long, GisTables] = {
+    val masterPid = MiniCube.meta.productId
+    val siblingPid = masterPid + 1
+    ProductRunner.runGroup(spark, catalog, masterPid,
+      products = Map(
+        masterPid -> ((MiniCube.meta, MiniCube.csv(spark))),
+        siblingPid -> ((MiniCube.meta.copy(productId = siblingPid), MiniCube.csv(spark)))),
+      mergeConfig = Map(masterPid -> Seq(siblingPid)),
+      geoRef = MiniCube.geoRef(spark),
+      nullReasons = MiniCube.nullReasons(spark),
+      defaults = MiniCube.defaults,
+      uomCodeset = MiniCube.uomCodeset,
+      subjectCodeset = MiniCube.subjectCodeset)
+  }
+
+  test("DGUID warnings are materialized before runGroup releases its caches") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_runner_warn").toString
+    val out = runMiniGroup(new ParquetCatalog(spark, dir))
+    var warned = Map.empty[Long, Set[String]]
+    val jobs = jobsOf {
+      warned = out.map { case (pid, t) =>
+        pid -> t.dguidWarnings.collect().map(_.getString(0)).toSet
+      }
+    }
+    assert(jobs == 0, s"collecting the warnings ran $jobs Spark jobs")
+    assert(warned.values.toSet == Set(Set("2016A9999")), s"$warned")
+  }
+
+  test("a master + sibling group load runs at most 64 Spark jobs") {
+    // job counts do not drift between runs, so this pins the load's
+    // plan count: it fails if a change adds per-product jobs back
+    val dir = java.nio.file.Files.createTempDirectory("graft_runner_jobs").toString
+    val jobs = jobsOf(runMiniGroup(new ParquetCatalog(spark, dir)))
+    println(s"[ProductRunnerSpec] master + sibling runGroup: $jobs jobs")
+    assert(jobs <= 64, s"runGroup ran $jobs jobs")
+  }
+
   test("expandSiblings: master first, deduplicated") {
     val merge = Map(100L -> Seq(101L, 100L, 102L))
     assert(ProductRunner.expandSiblings(100L, merge) == Seq(100L, 101L, 102L))
