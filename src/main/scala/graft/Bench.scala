@@ -14,20 +14,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.configure(SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing targets max(totalBytes/defaultParallelism,
-      // minPartitionSize); the default 1 MB floor collapses small-byte
-      // but CPU-heavy post-shuffle stages (levenshtein/array_intersect
-      // verifies) to ONE task on this box. 64k lets parallelismFirst
-      // keep cores busy on small shuffles; at cluster scale
-      // bytes/parallelism is far above 64k and the floor never binds.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions) // native-operator strategies
+      .config("spark.sql.shuffle.partitions", cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

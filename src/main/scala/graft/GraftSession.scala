@@ -3,12 +3,23 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Blessed SparkSession factory for library users: AQE on, shuffle
-  * parallelism matched to cores (never the 200 default), dynamic
-  * partition overwrite (so catalog writes replace only their
-  * partition), UTC session time, and the graft SQL functions
-  * registered via [[GraftExtensions]].
+  * parallelism matched to cores (never the 200 default), UTC session
+  * time, a generated-class cache that holds a cube load's working set,
+  * and the graft SQL functions registered via [[GraftExtensions]].
   */
 object GraftSession {
+
+  /** Bound of Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). One
+    * `cube_serve` JVM — a warm-up product, a merged master + sibling
+    * group, then serving — generates about 190 distinct sources, and Spark
+    * keys each entry by (context classloader, source), so in local mode
+    * the driver's compile check and the task each hold one: about 250
+    * keys. At 100 the group load evicts what setup compiled and Janino
+    * compiles it again. The bound still keeps a long-lived session from
+    * leaking generated classes.
+    */
+  private val CodegenCacheEntries = 1000
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
       appName: String = "graft"): SparkSession =
@@ -31,7 +42,8 @@ object GraftSession {
       // busy on small shuffles; at cluster scale bytes/parallelism is
       // far above 64k and the floor never binds.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      // static: read once, when the first generated class is compiled
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)

@@ -63,8 +63,8 @@ object GisDemo {
       defaults = ProductDefaults(1, "default", 1, "#FFFFFF", "#000000", 2),
       ids = NextIds())
 
-    // run through the orchestrator + catalog (per-product dynamic
-    // partition overwrite), exactly as a multi-product load would
+    // run through the orchestrator + catalog (per-product directory
+    // replace), exactly as a multi-product load would
     val catalog = new graft.io.ParquetCatalog(spark, out)
     ProductRunner.runGroup(spark, catalog, meta.productId,
       products = Map(meta.productId -> ((meta, in.csv))),

@@ -488,7 +488,13 @@ object GisPipeline {
       else RefDates.generate(meta.startDate, meta.endDate, meta.frequencyCode)
 
     val fpid = in.functionalPid.getOrElse(meta.productId)
-    val prepared = setupColumns(in.csv, meta, in.minRefYear, in.functionalPid).cache()
+    // cached with only the columns its consumers read: the release
+    // timestamp column would inline a per-product literal into the
+    // cached plan's generated class
+    val prepared = setupColumns(in.csv, meta, in.minRefYear, in.functionalPid)
+      .select("REF_DATE", "DGUID", "IndicatorCode", "RefYear", "ReferencePeriod",
+        "GeographicLevelId", "STATUS", "VALUE")
+      .cache()
 
     val theme = buildIndicatorTheme(spark, meta, subjectCodeset,
       needParentSubject = in.themeNeeds.parentSubject,

@@ -18,28 +18,37 @@ import org.apache.spark.sql.functions._
   *
   * Scale note: per-dimension member frames are tiny (10s of rows);
   * the crossJoin chain is broadcast-nested-loop over literal-sized
-  * inputs, and each IndicatorId is a column expression over the row's
-  * date position and member ranks — no sort, shuffle or numbering
-  * job. That is exact because the frame is always the complete
-  * (kept dates × member combos) grid, so a row's dense rank in
-  * (date, member ranks) order is its mixed-radix number.
+  * inputs, and each IndicatorId is a sum of columns over the row's
+  * date and member offsets — no sort, shuffle or numbering job. That is
+  * exact because the frame is always the complete (kept dates × member
+  * combos) grid, so a row's dense rank in (date, member ranks) order is
+  * its mixed-radix number.
+  *
+  * Per-product values — the first id, the offsets, the theme id and
+  * the release time — are row data of the local frames, never
+  * literals: products with the same number of non-geo dimensions plan
+  * the same generated classes, so a load compiles them once.
   */
 object IndicatorBuilder {
 
   /** Cross product of non-geo dimension members (J14). Output:
-    * Coordinate, IndicatorNameLong_EN/_FR, UOM_ID, plus `__ord_i`
-    * sort-key columns (member rank per dimension, memberId order).
+    * Coordinate, IndicatorNameLong_EN/_FR, UOM_ID, plus `__off_i`
+    * id-offset columns: member rank per dimension (memberId order)
+    * times the member count of every later dimension, so a combo's
+    * rank in (ranks) order is Σ `__off_i`.
     */
   def memberCombos(spark: SparkSession, meta: CubeMetadata): DataFrame = {
     import spark.implicits._
     val dims = meta.nonGeoDimensions.sortBy(_.positionId)
     require(dims.nonEmpty, s"product ${meta.productId} has no non-geo dimensions")
+    val strides = dims.map(_.members.size.toLong).scanRight(1L)(_ * _)
     val dfs = dims.zipWithIndex.map { case (dim, i) =>
       val rows = dim.members.sortBy(_.memberId).zipWithIndex.map { case (m, ord) =>
         (m.memberId, m.nameEn, m.nameFr,
-          if (dim.hasUom) m.uomCode.map(_.toString).getOrElse("") else "", ord)
+          if (dim.hasUom) m.uomCode.map(_.toString).getOrElse("") else "",
+          ord * strides(i + 1))
       }
-      rows.toDF(s"id_$i", s"en_$i", s"fr_$i", s"uom_$i", s"__ord_$i")
+      rows.toDF(s"id_$i", s"en_$i", s"fr_$i", s"uom_$i", s"__off_$i")
     }
     val crossed = dfs.reduce(_ crossJoin _)
     val n = dims.size
@@ -53,7 +62,7 @@ object IndicatorBuilder {
         // struct-carried combos only the hasUom dimension contributes.
         when(uomJoined === "", lit(null).cast("short"))
           .otherwise(uomJoined.cast("double").cast("short")).as("UOM_ID")) ++
-        (0 until n).map(i => col(s"__ord_$i"))): _*)
+        (0 until n).map(i => col(s"__off_$i"))): _*)
   }
 
   /** Reference dates the min-year gate keeps
@@ -80,21 +89,19 @@ object IndicatorBuilder {
     val combos = memberCombos(spark, meta)
     val nOrd = meta.nonGeoDimensions.size
 
-    // J15: × reference dates, with the min-year gate
+    // J15: × reference dates, with the min-year gate. IndicatorId =
+    // nextId + the row's dense rank in (date, member ranks) order.
+    // Every (kept date, combo) pair has exactly one row — the uom join
+    // below is a left join on a unique key — so that rank is
+    // datePos·Π|Mᵢ| + Σ `__off_i`; each date row carries its first id
+    val combosPerDate = meta.nonGeoDimensions.map(_.members.size.toLong).product
     val dates = keptDates(meta, refDates, minRefYear, justicePids).zipWithIndex
-      .map { case (d, i) => (d.toString, i.toLong) }
-      .toDF("__refDateStr", "__datePos")
-
-    // IndicatorId = nextId + the row's dense rank in (date, member
-    // ranks) order. Every (kept date, combo) pair has exactly one row —
-    // the uom join below is a left join on a unique key — so that rank
-    // is datePos·Π|Mᵢ| + Σ ordᵢ·Π_{j>i}|Mⱼ|, the member order being
-    // memberCombos' positionId order
-    val strides = meta.nonGeoDimensions.sortBy(_.positionId)
-      .map(_.members.size.toLong).scanRight(1L)(_ * _)
-    val indicatorId = (0 until nOrd).foldLeft(
-      lit(nextId) + col("__datePos") * strides.head) { (id, i) =>
-      id + col(s"__ord_$i") * strides(i + 1)
+      .map { case (d, i) =>
+        (d.toString, nextId + i * combosPerDate, meta.productId, meta.releaseTime)
+      }
+      .toDF("__refDateStr", "__firstId", "IndicatorThemeID", "__release")
+    val indicatorId = (0 until nOrd).foldLeft(col("__firstId")) { (id, i) =>
+      id + col(s"__off_$i")
     }
 
     val pid = meta.productId.toString
@@ -123,12 +130,11 @@ object IndicatorBuilder {
       .withColumn("LastIndicatorMember_FR",
         CubeOps.nthFromDelimited(col("IndicatorNameLong_FR"), " _ ", -1))
       .join(broadcast(uomDf), col("UOM_ID") === col("__uom_code"), "left")
-      .withColumn("IndicatorThemeID", lit(meta.productId))
-      .withColumn("ReleaseIndicatorDate", to_timestamp(lit(meta.releaseTime)))
+      .withColumn("ReleaseIndicatorDate", to_timestamp(col("__release")))
       .withColumn("Vector", lit(null).cast("int"))
       .withColumn("IndicatorId", indicatorId)
-      .drop((Seq("__refDateStr", "__datePos", "__uom_code") ++
-        (0 until nOrd).map(i => s"__ord_$i")): _*)
+      .drop((Seq("__refDateStr", "__firstId", "__release", "__uom_code") ++
+        (0 until nOrd).map(i => s"__off_$i")): _*)
   }
 
   /** Insert subset, column order per dfhandler.py:303-308. */

@@ -1,32 +1,53 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Managed parquet table catalog with per-product overwrite semantics.
   *
   * Replaces the reference's cascading transactional delete
-  * (scdb.py:32-72, K2): "update product" = dynamically overwrite that
-  * product's partition of each table, leaving other products' data
-  * untouched. Partitioning by product id also gives partition pruning
-  * on the read side for the serving queries.
+  * (scdb.py:32-72, K2): "update product" = replace that product's
+  * directory `ProductPartitionId=<pid>` of each table, leaving other
+  * products' data untouched. The directory name is the partition
+  * column, so reads get partition pruning for the serving queries.
   */
 class ParquetCatalog(spark: SparkSession, root: String) {
 
   private val PartCol = "ProductPartitionId"
 
-  /** Append-or-replace the rows of one product in `table`.
-    * Dynamic partition overwrite: only the written partition is
-    * replaced — the Spark-native equivalent of delete-then-append
-    * inside one transaction.
+  private def fs(path: Path) = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Replace the rows of one product in `table` with `df` — an empty
+    * `df` empties the product. The frame is written to a `.`-prefixed
+    * staging directory beside the product's, which neither Spark's file
+    * index nor [[exists]] reads; then the old directory is deleted and
+    * the staging directory renamed into its place (the delete-then-
+    * rename of Spark's dynamic partition overwrite commit). A write
+    * that fails leaves the previous rows in place. The plan carries no
+    * product id, so every product's write reuses the same generated
+    * classes.
     */
-  def writeProduct(table: String, df: DataFrame, productId: Long): Unit =
-    df.withColumn(PartCol, lit(productId))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(PartCol)
-      .mode(SaveMode.Overwrite)
-      .parquet(s"$root/$table")
+  def writeProduct(table: String, df: DataFrame, productId: Long): Unit = {
+    val dest = new Path(s"$root/$table/$PartCol=$productId")
+    val staging = new Path(s"$root/$table/.$PartCol=$productId")
+    val fileSystem = fs(dest)
+    try df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    catch { case e: Throwable => fileSystem.delete(staging, true); throw e }
+    // Spark writes a schema-only file when the first task has no rows;
+    // drop it, so an emptied product holds no data file (see exists)
+    val conf = spark.sparkContext.hadoopConfiguration
+    fileSystem.listStatus(staging).filter(f => isData(f.getPath.getName)).foreach { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      val rows = try reader.getRecordCount finally reader.close()
+      if (rows == 0) fileSystem.delete(f.getPath, false)
+    }
+    if (fileSystem.exists(dest)) fileSystem.delete(dest, true)
+    if (!fileSystem.rename(staging, dest))
+      throw new java.io.IOException(s"could not rename $staging to $dest")
+  }
 
   def read(table: String): DataFrame =
     spark.read.parquet(s"$root/$table").drop(PartCol)
@@ -51,10 +72,14 @@ class ParquetCatalog(spark: SparkSession, root: String) {
     * re-append).
     */
   def deleteProduct(table: String, productId: Long): Unit = {
-    val path = new org.apache.hadoop.fs.Path(s"$root/$table/$PartCol=$productId")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) { fs.delete(path, true); () }
+    val path = new Path(s"$root/$table/$PartCol=$productId")
+    if (fs(path).exists(path)) { fs(path).delete(path, true); () }
   }
+
+  /** Spark's file index skips these names: _SUCCESS, .crc files, and
+    * staging or _temporary directories.
+    */
+  private def isData(name: String): Boolean = !name.startsWith("_") && !name.startsWith(".")
 
   /** True iff `table` holds at least one data file. A directory
     * without any — a product that wrote no rows, or `deleteProduct` of
@@ -62,16 +87,14 @@ class ParquetCatalog(spark: SparkSession, root: String) {
     * schema from it, so readers such as the id watermarks must skip it.
     */
   def exists(table: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(s"$root/$table")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val path = new Path(s"$root/$table")
     val base = path.toUri.getPath
-    fs.exists(path) && {
-      val files = fs.listFiles(path, true)
+    fs(path).exists(path) && {
+      val files = fs(path).listFiles(path, true)
       var found = false
       while (!found && files.hasNext) {
-        // skip _SUCCESS, .crc and anything under _temporary
         found = files.next().getPath.toUri.getPath.stripPrefix(base)
-          .split('/').forall(s => !s.startsWith("_") && !s.startsWith("."))
+          .split('/').forall(isData)
       }
       found
     }
@@ -81,8 +104,8 @@ class ParquetCatalog(spark: SparkSession, root: String) {
     * probe — no file listing or scan).
     */
   def hasProduct(table: String, productId: Long): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(s"$root/$table/$PartCol=$productId")
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+    val path = new Path(s"$root/$table/$PartCol=$productId")
+    fs(path).exists(path)
   }
 
   /** Write `df` as a bucketed managed table (hash-bucketed and sorted

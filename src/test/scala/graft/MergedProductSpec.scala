@@ -172,6 +172,45 @@ class MergedProductSpec extends AnyFunSuite {
     assert(ids(s2Dates, "DimensionValueId") == Seq(probedDimValueId))
   }
 
+  test("a sibling loaded standalone, then merged, keeps no stale rows (empty rewrites)") {
+    // the master already holds every date of the sibling and all its
+    // (indicator, level) pairs, so the merged sibling's new-date and GLI
+    // writes are empty: they must still replace its standalone rows,
+    // whose Dimensions and Indicator rows the sibling deletes
+    val masterPid = MiniCube.meta.productId
+    val sib = masterPid + 1
+    val products = Map(
+      masterPid -> ((MiniCube.meta, MiniCube.csv(spark))),
+      sib -> ((MiniCube.meta.copy(productId = sib), MiniCube.csv(spark))))
+    val dir = java.nio.file.Files.createTempDirectory("graft_standalone_merged").toString
+    val catalog = new graft.io.ParquetCatalog(spark, dir)
+    def load(master: Long, pids: Set[Long], merge: Map[Long, Seq[Long]]): Unit = {
+      ProductRunner.runGroup(spark, catalog, master,
+        products = products.filter { case (pid, _) => pids(pid) },
+        mergeConfig = merge,
+        geoRef = MiniCube.geoRef(spark),
+        nullReasons = MiniCube.nullReasons(spark),
+        defaults = MiniCube.defaults,
+        uomCodeset = MiniCube.uomCodeset,
+        subjectCodeset = MiniCube.subjectCodeset)
+      ()
+    }
+    load(sib, Set(sib), Map.empty)
+    assert(catalog.readProduct("GeographicLevelForIndicator", sib).count() > 0)
+    load(masterPid, Set(masterPid, sib), Map(masterPid -> Seq(sib)))
+
+    def ids(df: org.apache.spark.sql.DataFrame, c: String): Set[Long] =
+      df.select(c).as[Long].collect().toSet
+    val dimensionIds = ids(catalog.read("Dimensions"), "DimensionId")
+    val siblingValueDims = ids(catalog.readProduct("DimensionValues", sib), "DimensionId")
+    assert(siblingValueDims.subsetOf(dimensionIds),
+      s"sibling DimensionValues point at deleted dimensions: ${siblingValueDims -- dimensionIds}")
+    val indicatorIds = ids(catalog.read("Indicator"), "IndicatorId")
+    val gliIds = ids(catalog.read("GeographicLevelForIndicator"), "IndicatorId")
+    assert(gliIds.subsetOf(indicatorIds),
+      s"GLI rows point at deleted indicators: ${gliIds -- indicatorIds}")
+  }
+
   test("justice DGUID re-vintage applied in master values path") {
     // 2018 CMA row: DGUID untouched (not 2011-vintage), geo level S0503
     val gl = master.geographicLevelForIndicator
