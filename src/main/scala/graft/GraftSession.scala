@@ -14,7 +14,7 @@ object GraftSession {
     * `cube_serve` JVM — a warm-up product, a merged master + sibling
     * group, then serving — generates about 190 distinct sources, and Spark
     * keys each entry by (context classloader, source), so in local mode
-    * the driver's compile check and the task each hold one: about 250
+    * the planner's compile check and the task each hold one: about 250
     * keys. At 100 the group load evicts what setup compiled and Janino
     * compiles it again. The bound still keeps a long-lived session from
     * leaking generated classes.
