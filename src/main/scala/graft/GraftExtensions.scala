@@ -12,12 +12,9 @@ import graft.functions.{DotProduct, KmvBottomK, KmvEstimate, KmvUnion, MinHashSi
   * Catalyst expressions with the SQL function registry, so
   * `SELECT dot_product(a, b)` works from plain Spark SQL.
   *
-  * Enable with:
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)        // programmatic, or
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  * }}}
+  * [[GraftSession]] installs it on every session it builds; a
+  * spark-submit deployment enables it with
+  * `--conf spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

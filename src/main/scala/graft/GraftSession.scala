@@ -2,10 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Blessed SparkSession factory for library users: AQE on, shuffle
-  * parallelism matched to cores (never the 200 default), UTC session
-  * time, a generated-class cache that holds a cube load's working set,
-  * and the graft SQL functions registered via [[GraftExtensions]].
+/** The single place that builds a SparkSession: every main, tool and
+  * test session comes from [[local]], a cluster deployment passes its
+  * own builder through [[configure]]. The configuration is AQE on,
+  * shuffle parallelism matched to cores (never the 200 default), UTC
+  * session time, a generated-class cache that holds a cube load's
+  * working set, and the graft SQL functions registered via
+  * [[GraftExtensions]]; Spark's default ANSI mode is left on.
+  *
+  * One caller overrides a setting, at runtime right after the session
+  * is built: `tools.PlanReport` turns AQE off, because the
+  * pre-adaptive plan carries the codegen ids it counts.
   */
 object GraftSession {
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,20 +10,10 @@ object Verify {
       case Array(s, o)    => (s, o, "")
       case Array(s, o, f) => (s, o, f)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_ANSI=true runs the whole contract under ANSI mode —
-    // the overflow-audit sweep: any silent numeric wrap in a query
-    // becomes a loud error here instead of a wrong answer at scale
-    // (the q262 bug class). The driver never sets it.
-    val ansi = sys.env.getOrElse("SPARK_GRAFT_ANSI", "false")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", ansi)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions) // native-operator strategies
-      .getOrCreate()
+    // the session Bench times: Spark's default ANSI mode, so a silent
+    // numeric wrap (the q262 bug class) is a loud error here too
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(_._1.contains(nameFilter)).foreach { case (name, fn) =>

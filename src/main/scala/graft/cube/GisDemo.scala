@@ -79,13 +79,8 @@ object GisDemo {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/gis_demo")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("gis-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "gis-demo")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

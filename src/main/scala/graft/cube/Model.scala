@@ -44,8 +44,6 @@ final case class CubeMetadata(
     */
   def nonGeoDimensions: Seq[Dimension] =
     dimensions.filterNot(_.nameEn.equalsIgnoreCase("Geography"))
-
-  def dimensionNamesEn: Seq[String] = dimensions.map(_.nameEn)
 }
 
 /** Per-product chart defaults (product_defaults.json:498-505,

@@ -56,17 +56,6 @@ object ZOrder {
     terms.reduce(_ bitwiseOR _)
   }
 
-  /** The identical N-ary interleave as ANSI/DuckDB SQL text. */
-  def zValueSqlN(names: Seq[String], bits: Int): String = {
-    val n = names.size
-    val terms = (0 until bits).flatMap { b =>
-      names.zipWithIndex.map { case (x, i) =>
-        s"((($x >> $b) & 1) << ${n * b + i})"
-      }
-    }
-    terms.mkString("(", " | ", ")")
-  }
-
   /** The identical interleave as ANSI/DuckDB SQL text (`>>`, `&`, `|`
     * operators), for oracle replay of [[zValue2]].
     */

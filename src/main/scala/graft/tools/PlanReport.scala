@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Dev harness: emit a markdown table of physical-plan shape metrics
   * for EVERY contract query — shuffle exchanges, broadcasts, sorts,
@@ -74,16 +72,11 @@ object PlanReport {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val out = args.headOption.getOrElse("PLANS_r04.md")
     val baselinePath = args.drop(1).headOption
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // AQE off for REPORTING only: the pre-adaptive physical plan
-      // carries the WholeStageCodegen span annotations the table
-      // counts; all contract execution paths keep AQE on.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession.local(8, "graft-plan-report")
+    // AQE off for REPORTING only: the pre-adaptive physical plan
+    // carries the WholeStageCodegen span annotations the table
+    // counts; all contract execution paths keep AQE on.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# Physical-plan shape per contract query\n\n")

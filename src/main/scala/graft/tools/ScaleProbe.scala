@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{GraftExtensions, SparkEntry}
+import graft.{GraftSession, SparkEntry}
 
 /** Scale-growth probe: time a set of queries at TWO scale factors and
   * report per-query growth next to the data's own row-count ratio —
@@ -34,15 +32,8 @@ object ScaleProbe {
       "/root/testdata/sf0.01")
     val large = sys.env.getOrElse("SPARK_GRAFT_SF_LARGE",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, "graft-scale-probe")
     spark.sparkContext.setLogLevel("WARN")
 
     def rows(dir: String): Long =

@@ -2,13 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+/** The tests' shared session: the shipped configuration on 4 cores. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions) // native-operator strategies
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4, "graft-test")
 }
