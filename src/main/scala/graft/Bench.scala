@@ -1,29 +1,46 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
-  *
-  * Execution is a `noop`-format write so the full plan runs (a bare
-  * count() would let Catalyst prune away row-wise computation).
-  * One JVM/session warmup pass over a representative query removes
-  * first-query codegen/classload noise from the per-query numbers.
   */
 object Bench {
+
+  /** Run one contract query to completion and return its seconds.
+    * Execution is a `noop`-format write so the full plan runs (a bare
+    * count() would let Catalyst prune away row-wise computation).
+    */
+  def exec(spark: SparkSession, sfDir: String, name: String): Double = {
+    val t0 = System.nanoTime()
+    SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** One JVM/session warmup pass over representative queries (joins +
+    * agg + window + strings paths) removes first-query
+    * codegen/classload noise from the numbers taken after it.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    try Seq("q14_multiway_join", "q15_strings").foreach(exec(spark, sfDir, _))
+    catch { case _: Throwable => () }
+
+  /** One timed sample (secs -1 when it failed). */
+  private final case class Sample(secs: Double, records: Seq[QueryRecord],
+      compiles: Long)
+  private val failed = Sample(-1.0, Nil, 0L)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.local(cpus, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
-    def exec(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+    warmUp(spark, sfDir)
 
-    // warmup: joins + agg + window + strings paths
-    try { exec("q14_multiway_join"); exec("q15_strings") }
-    catch { case _: Throwable => () }
-
-    // observability feed: per-query shuffle bytes ride the same
+    // observability feed: per-query layer records ride the same
     // listener a production deployment would scrape. Delivery is
     // async; a full bus drain (waitUntilEmpty) can block indefinitely
     // while heartbeat/streaming events keep arriving, so attribution
@@ -35,7 +52,7 @@ object Bench {
     // as this run's start, so the wait cost is paid once, not twice.
     // Attribution advances its cursor on the failure path too — a
     // crashed run's partial jobs must not bleed into the next query's
-    // shuffle-bytes measurement (spec'd in MetricsSpec).
+    // records (spec'd in MetricsSpec).
     val attr = new Attribution(() => metrics.records)
 
     // min of two measured runs per query: filters scheduler/GC noise.
@@ -43,12 +60,17 @@ object Bench {
     // query persisted internally (LSH signatures etc.), so both runs
     // compute from cold data — only JIT/codegen warmth carries over.
     // Failures are reported as -1, never as a (fast) fake timing.
-    // Each timing also carries the run's summed shuffle bytes.
-    def timeOnce(name: String): (Double, Long) = {
+    // Each timing also carries the run's listener records and its
+    // compile count. The compile counter is JVM-wide, which is sound
+    // only because one query runs at a time.
+    def timeOnce(name: String): Sample = {
       spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      try attr.attribute { exec(name); (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => (-1.0, 0L) }
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      try {
+        val (secs, records) = attr.attribute(exec(spark, sfDir, name))
+        Sample(secs, records,
+          CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0)
+      } catch { case _: Throwable => failed }
     }
     // optional comma-separated substring filter for targeted local perf
     // work (the driver never sets it — it always times the full set)
@@ -72,35 +94,36 @@ object Bench {
     // warm samples is shed by min(), while the pass's cold-codegen
     // penalty only ever makes it a no-op (min never increases).
     val best2 = selected.map { name =>
-      val (a, ab) = timeOnce(name)
-      val (b, bb) = timeOnce(name)
-      val (best, bytes) =
-        if (a < 0 || b < 0) (-1.0, 0L)
-        else if (a <= b) (a, ab) else (b, bb)
-      (name, best, bytes, Seq(a, b))
+      val a = timeOnce(name)
+      val b = timeOnce(name)
+      val best =
+        if (a.secs < 0 || b.secs < 0) failed
+        else if (a.secs <= b.secs) a else b
+      (name, best, Seq(a.secs, b.secs))
     }
-    val timed = best2.map { case (name, best, bestBytes, ab) =>
-      if (best < 0) (name, best, bestBytes, ab)
+    val timed = best2.map { case (name, best, ab) =>
+      if (best.secs < 0) (name, best, ab)
       else {
-        val (c, cb) = timeOnce(name)
-        if (c < 0) {
+        val c = timeOnce(name)
+        if (c.secs < 0) {
           // two clean runs already exist, so keep the timing — but an
           // intermittent failure must not vanish from the record
           System.err.println(s"[bench] $name: separated third run " +
             "FAILED (intermittent); reporting min of the two clean runs")
-          (name, best, bestBytes, ab :+ c)
-        } else if (c < best) (name, c, cb, ab :+ c)
-        else (name, best, bestBytes, ab :+ c)
+          (name, best, ab :+ c.secs)
+        } else if (c.secs < best.secs) (name, c, ab :+ c.secs)
+        else (name, best, ab :+ c.secs)
       }
     }
-    val results = timed.map { case (n, t, _, _) => n -> t }
-    val shuffleBytes = timed.map { case (n, _, b, _) => n -> b }
+    val results = timed.map { case (n, r, _) => n -> r.secs }
+    val shuffleBytes =
+      timed.map { case (n, r, _) => n -> r.records.map(_.shuffleBytes).sum }
     // every RAW sample (A/B back-to-back, then the separated third
     // pass), in measurement order: the r10↔r11 driver delta was only
     // diagnosable via shuffle-byte cross-checks because min() hides
     // which sample a co-tenant burst hit — the raw triples make a
     // burst visible directly in the artifact
-    val samples = timed.map { case (n, _, _, ss) => n -> ss }
+    val samples = timed.map { case (n, _, ss) => n -> ss }
     spark.catalog.clearCache() // release the last query's result cache
     // 3-decimal timings: millisecond precision is all the box's noise
     // floor supports
@@ -117,8 +140,15 @@ object Bench {
     val samplesJson = samples.map { case (k, ss) =>
       "\"" + k + "\":" + ss.map(r3).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
+    // per-query layers of the min-time run, summed over its records:
+    // how much of the wall time was planning, how many jobs, stages
+    // and tasks ran, their CPU, the longest task (near the wall time,
+    // one task held the query) and the compiles it paid
+    val layersJson = timed.map { case (n, Sample(_, rs, compiles), _) =>
+      s""""$n":{"plan_ms":${rs.map(_.planMs).sum},"jobs":${rs.map(_.jobs).sum},"stages":${rs.map(_.stages).sum},"tasks":${rs.map(_.tasks).sum},"task_cpu_ms":${rs.map(_.taskCpuMs).sum},"max_task_ms":${rs.map(_.maxTaskMs).maxOption.getOrElse(0L)},"compiles":$compiles}"""
+    }.mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":3,"queries":${mapJson(results)},"shuffle_bytes":$bytesJson,"samples":$samplesJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":3,"queries":${mapJson(results)},"shuffle_bytes":$bytesJson,"samples":$samplesJson,"layers":$layersJson,"sf":"$sfDir"}"""
     // The driver keeps only the LAST ~2000 chars of stdout and the sbt
     // success footer eats ~110 of them, so the FINAL line must be a
     // complete JSON object in well under that budget. With 100+ queries

@@ -1,21 +1,24 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
-
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Lightweight run observability: one record per completed Dataset
-  * action — the callback name (count/save/collect…), wall duration,
-  * the root operator, and its `numOutputRows` metric when the
-  * operator carries one — queryable back as a DataFrame. This is the
-  * "what ran, how long, how big" feed a production deployment scrapes
-  * into its dashboard, kept engine-side so every entry point (SQL,
-  * DataFrame, streaming foreachBatch bodies) is covered uniformly.
+  * action, queryable back as a DataFrame — the "what ran, how long,
+  * how big" feed a production deployment scrapes into its dashboard,
+  * kept engine-side so every entry point (SQL, DataFrame, streaming
+  * foreachBatch bodies) is covered uniformly. Per layer, a record
+  * carries: the action (callback name, wall duration, root operator
+  * and its `numOutputRows` when it has one, failure); the Catalyst
+  * phases' summed `planMs`; the `jobs`, `stages` and `tasks` run under
+  * its SQL execution id (bare RDD actions have none); their executor
+  * CPU `taskCpuMs` and longest task `maxTaskMs`; and `shuffleBytes`.
   *
   * Register per session via [[Metrics.install]]; the buffer is
   * bounded (oldest dropped) so a long-lived session can't leak.
@@ -24,22 +27,40 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 final case class QueryRecord(action: String, rootOp: String,
     durationMs: Long, outputRows: Long, shuffleBytes: Long,
-    failed: Boolean)
+    failed: Boolean, planMs: Long = 0L, jobs: Int = 0, stages: Int = 0,
+    tasks: Int = 0, taskCpuMs: Long = 0L, maxTaskMs: Long = 0L)
 
+/** `onSuccess`/`onFailure` write a record per action; the scheduler
+  * callbacks fold jobs, stages and tasks into per-execution counters.
+  * On the bus's shared queue the session's execution-listener bus
+  * (registered first by [[Metrics.install]]) hands an execution's end
+  * event to `onSuccess`/`onFailure` just before `onOtherEvent` sees
+  * it, which completes that newest record with the execution's
+  * counters — whole, as its task ends were queued before its end.
+  */
 class GraftMetricsListener(maxRecords: Int = 10000)
-    extends QueryExecutionListener {
+    extends SparkListener with QueryExecutionListener {
 
-  private val buf = new ConcurrentLinkedQueue[QueryRecord]()
-  private val n = new AtomicInteger(0)
+  private final class Work {
+    var jobs, stages, tasks = 0
+    var cpuNs, maxTaskMs = 0L
+  }
 
-  private def add(r: QueryRecord): Unit = {
-    buf.add(r)
-    if (n.incrementAndGet() > maxRecords) { buf.poll(); n.decrementAndGet() }
-    ()
+  // guarded by `this`: bus events arrive on one thread, readers on others
+  private val buf = new java.util.ArrayDeque[QueryRecord]()
+  private val work = mutable.HashMap.empty[Long, Work] // by execution id
+  private val stageWork = mutable.HashMap.empty[Int, Work] // by stage id
+  private var newestAwaitsWork = false
+
+  private def add(r: QueryRecord): Unit = synchronized {
+    buf.addLast(r)
+    if (buf.size > maxRecords) buf.pollFirst()
+    newestAwaitsWork = true
   }
 
   private def record(funcName: String, qe: QueryExecution,
       durationNs: Long, failed: Boolean): Unit = {
+    val planMs = qe.tracker.phases.values.map(_.durationMs).sum
     // a query that died during analysis/planning has no executedPlan —
     // the lazy val rethrows. Those are exactly the failed=true records
     // the feature exists for, so fall back to a placeholder instead of
@@ -47,7 +68,7 @@ class GraftMetricsListener(maxRecords: Int = 10000)
     scala.util.Try(qe.executedPlan).toOption match {
       case None =>
         add(QueryRecord(funcName, "unplanned", durationNs / 1000000L,
-          -1L, 0L, failed))
+          -1L, 0L, failed, planMs))
       case Some(root) =>
         // under AQE the plan nests behind AdaptiveSparkPlanExec and each
         // materialized stage behind a leaf QueryStageExec — walk through
@@ -65,7 +86,7 @@ class GraftMetricsListener(maxRecords: Int = 10000)
           .sum
         add(QueryRecord(funcName, root.nodeName, durationNs / 1000000L,
           root.metrics.get("numOutputRows").map(_.value).getOrElse(-1L),
-          shuffleBytes, failed))
+          shuffleBytes, failed, planMs))
     }
   }
 
@@ -75,7 +96,42 @@ class GraftMetricsListener(maxRecords: Int = 10000)
   override def onFailure(funcName: String, qe: QueryExecution,
       exception: Exception): Unit = record(funcName, qe, 0L, failed = true)
 
-  def records: Seq[QueryRecord] = buf.iterator().asScala.toSeq
+  private def workOf(props: java.util.Properties): Option[Work] =
+    Option(props).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+      .map(id => work.getOrElseUpdate(id.toLong, new Work))
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    synchronized(workOf(e.properties).foreach(_.jobs += 1))
+
+  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+    synchronized(workOf(e.properties).foreach { w =>
+      w.stages += 1
+      stageWork(e.stageInfo.stageId) = w
+    })
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    synchronized(stageWork.get(e.stageId).foreach { w =>
+      w.tasks += 1
+      Option(e.taskMetrics).foreach(w.cpuNs += _.executorCpuTime)
+      Option(e.taskInfo).filter(_.finished)
+        .foreach(t => w.maxTaskMs = math.max(w.maxTaskMs, t.duration))
+    })
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case end: SparkListenerSQLExecutionEnd => synchronized {
+      work.remove(end.executionId).foreach { w =>
+        stageWork.filterInPlace((_, sw) => sw ne w)
+        if (newestAwaitsWork)
+          buf.addLast(buf.pollLast().copy(jobs = w.jobs, stages = w.stages,
+            tasks = w.tasks, taskCpuMs = w.cpuNs / 1000000L,
+            maxTaskMs = w.maxTaskMs))
+      }
+      newestAwaitsWork = false
+    }
+    case _ => ()
+  }
+
+  def records: Seq[QueryRecord] = synchronized(buf.asScala.toSeq)
 }
 
 /** Cursor-based attribution of listener records to the action that
@@ -84,8 +140,8 @@ class GraftMetricsListener(maxRecords: Int = 10000)
   * enqueued since the previous call. The cursor advances on the
   * FAILURE path too: a crashed run's partial jobs still enqueued
   * listener events, and without consuming them here they would bleed
-  * into the NEXT query's shuffle-bytes measurement — the
-  * regression-signal-of-record must not inherit a stranger's bytes.
+  * into the NEXT query's measurement — the counts of record must not
+  * inherit a stranger's jobs, CPU or bytes.
   *
   * `records` is pulled lazily so the helper is testable against a
   * plain growing buffer (see MetricsSpec); Bench wires it to a
@@ -108,17 +164,16 @@ final class Attribution(records: () => Seq[QueryRecord],
     last
   }
 
-  /** Run `body`; return (result, shuffle bytes of the records it
-    * enqueued). Rethrows the body's exception after consuming its
-    * records.
+  /** Run `body`; return (result, the records it enqueued). Rethrows
+    * the body's exception after consuming its records.
     */
-  def attribute[T](body: => T): (T, Long) =
+  def attribute[T](body: => T): (T, Seq[QueryRecord]) =
     try {
       val r = body
       val after = settle()
-      val bytes = records().slice(cursor, after).map(_.shuffleBytes).sum
+      val charged = records().slice(cursor, after)
       cursor = after
-      (r, bytes)
+      (r, charged)
     } catch {
       case e: Throwable => cursor = settle(); throw e
     }
@@ -127,17 +182,21 @@ final class Attribution(records: () => Seq[QueryRecord],
 object Metrics {
 
   /** Install a listener on `spark` and return it (caller keeps the
-    * handle to read or uninstall).
+    * handle to read or uninstall). Registration order matters: see
+    * [[GraftMetricsListener]].
     */
   def install(spark: SparkSession,
       maxRecords: Int = 10000): GraftMetricsListener = {
     val l = new GraftMetricsListener(maxRecords)
     spark.listenerManager.register(l)
+    spark.sparkContext.addSparkListener(l)
     l
   }
 
-  def uninstall(spark: SparkSession, l: GraftMetricsListener): Unit =
+  def uninstall(spark: SparkSession, l: GraftMetricsListener): Unit = {
     spark.listenerManager.unregister(l)
+    spark.sparkContext.removeSparkListener(l)
+  }
 
   /** The captured records as a queryable frame. */
   def asDataFrame(spark: SparkSession,

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession}
 
 /** Scale-growth probe: time a set of queries at TWO scale factors and
   * report per-query growth next to the data's own row-count ratio —
@@ -17,7 +17,8 @@ import graft.{GraftSession, SparkEntry}
   * }}}
   * Small/large dirs default to sf0.01/sf0.1; override with
   * SPARK_GRAFT_SF_SMALL / SPARK_GRAFT_SF_LARGE. Timings are
-  * min-of-two noop-write runs per (query, sf) after a warmup, the
+  * min-of-two runs per (query, sf) of Bench's noop-write `exec`,
+  * after Bench's `warmUp` on each sf: the
   * Bench discipline. Not driver contract.
   */
 object ScaleProbe {
@@ -42,10 +43,7 @@ object ScaleProbe {
 
     def timeOnce(name: String, dir: String): Double = {
       spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+      Bench.exec(spark, dir, name)
     }
     def timeMin2(name: String, dir: String): Double =
       math.min(timeOnce(name, dir), timeOnce(name, dir))
@@ -53,8 +51,8 @@ object ScaleProbe {
     // one warmup per SF dir removes first-query codegen/classload
     // noise from the small-SF numbers (where it would otherwise
     // dominate and UNDERSTATE growth)
-    try timeOnce(names.head, small) catch { case _: Throwable => () }
-    try timeOnce(names.head, large) catch { case _: Throwable => () }
+    Bench.warmUp(spark, small)
+    Bench.warmUp(spark, large)
 
     val rowRatio = rows(large).toDouble / rows(small)
     def r3(v: Double): Double = math.round(v * 1000) / 1000.0

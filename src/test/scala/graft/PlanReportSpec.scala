@@ -1,14 +1,16 @@
 package graft
 
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.PlanReport
 
 /** The plan-shape differ that gates rounds against the committed
   * PLANS_r{N}.md — parse, compare, and the intentional-regression
-  * case.
+  * case — and the quadratic-join audit over the same plans.
   */
 class PlanReportSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
 
   private val baselineMd =
     """# Physical-plan shape per contract query
@@ -51,5 +53,50 @@ class PlanReportSpec extends AnyFunSuite {
       "q02_filter" -> Seq(0, 0, 0, 3, 2, 2), // sort gone
       "q99_new" -> Seq(9, 9, 9, 0, 9, 0)) // not in baseline
     assert(PlanReport.regressions(base, better).isEmpty)
+  }
+
+  // ranges this long are never broadcast by size; the plans below are
+  // only planned, never run
+  private def huge = spark.range(0L, 1L << 40)
+
+  test("a nested-loop join whose build side is a keyless aggregate passes") {
+    val one = spark.range(0, 10).agg(count(lit(1)).as("n"))
+    val plan = huge.crossJoin(broadcast(one)).queryExecution.executedPlan
+    assert(plan.toString.contains("BroadcastNestedLoopJoin"), plan)
+    assert(PlanReport.audit("q99_probe", plan).isEmpty)
+  }
+
+  test("a nested-loop join over a reused bounded broadcast passes") {
+    val one = broadcast(spark.range(0, 10).agg(count(lit(1)).as("n")))
+    // the report plans with AQE off, where exchange reuse is applied
+    // at planning time
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val plan = try huge.crossJoin(one)
+      .union(huge.filter(col("id") > 5).crossJoin(one))
+      .queryExecution.executedPlan
+    finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert(plan.toString.contains("ReusedExchange"), plan)
+    assert(PlanReport.audit("q99_probe", plan).isEmpty)
+  }
+
+  test("a nested-loop join over a keyed aggregate is flagged") {
+    val keyed = spark.range(0, 10).groupBy((col("id") % 3).as("k")).count()
+    val plan = huge.crossJoin(broadcast(keyed)).queryExecution.executedPlan
+    assert(PlanReport.audit("q99_probe", plan) ==
+      Some(("q99_probe: UNEXPECTED BroadcastNestedLoopJoin", true)))
+  }
+
+  private def cartesian =
+    huge.crossJoin(huge.select(col("id").as("id2"))).queryExecution.executedPlan
+
+  test("a CartesianProduct is flagged") {
+    assert(PlanReport.audit("q99_probe", cartesian) ==
+      Some(("q99_probe: UNEXPECTED CartesianProduct", true)))
+  }
+
+  test("a whitelisted name is reported but does not fail") {
+    assert(PlanReport.audit("q07_cross_join", cartesian) ==
+      Some(("q07_cross_join: whitelisted CartesianProduct", false)))
   }
 }
