@@ -13,11 +13,8 @@ import graft.io.ParquetCatalog
   */
 object ProductRunner {
 
-  /** Gis table names in write order. */
-  val tableNames: Seq[String] = Seq(
-    "IndicatorTheme", "Dimensions", "DimensionValues", "Indicator",
-    "IndicatorValues", "GeographyReferenceForIndicator",
-    "GeographicLevelForIndicator", "IndicatorMetaData", "RelatedCharts")
+  /** The 9 gis table names, in the order [[write]] writes a master's. */
+  val tableNames: Seq[String] = ParquetCatalog.schemas.keys.toSeq
 
   /** E2 changed-cube resolution (main.py:102-121): keep only known
     * products, and drop merged masters/siblings — merged products must
@@ -245,8 +242,7 @@ object ProductRunner {
       // this pid are removed (delete-then-skip semantics)
       catalog.writeProduct("DimensionValues", t.dateDimensionValues, pid)
       Seq("IndicatorTheme", "Dimensions", "Indicator",
-        "IndicatorMetaData", "RelatedCharts")
-        .foreach(tb => if (catalog.exists(tb)) catalog.deleteProduct(tb, pid))
+        "IndicatorMetaData", "RelatedCharts").foreach(catalog.deleteProduct(_, pid))
     }
   }
 }

@@ -11,6 +11,7 @@ import graft.io.ParquetCatalog
 class ProductRunnerSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.jobsOf
 
   test("resolveChangedProducts filters unknown and merged pids (E2)") {
     val merge = Map(100L -> Seq(101L, 102L))
@@ -20,38 +21,6 @@ class ProductRunnerSpec extends AnyFunSuite {
       mergeConfig = merge)
     assert(run == Seq(200L))
     assert(skipped == Seq(100L, 101L))
-  }
-
-  /** Spark jobs `body` starts, tagged through a thread-local property
-    * so jobs of anything else running in the JVM are not counted.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val key = "graft.test.jobTag"
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null && js.properties.getProperty(key) == tag) {
-          jobs.incrementAndGet(); ()
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, tag)
-    try {
-      body
-      // listener events arrive asynchronously: wait until the count settles
-      var (prev, quiet) = (-1, 0)
-      while (quiet < 3) {
-        Thread.sleep(200)
-        if (jobs.get() == prev) quiet += 1 else { prev = jobs.get(); quiet = 0 }
-      }
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get()
   }
 
   private def runMiniGroup(catalog: ParquetCatalog): Map[Long, GisTables] = {
@@ -89,6 +58,19 @@ class ProductRunnerSpec extends AnyFunSuite {
     val jobs = jobsOf(runMiniGroup(new ParquetCatalog(spark, dir)))
     println(s"[ProductRunnerSpec] master + sibling runGroup: $jobs jobs")
     assert(jobs <= 64, s"runGroup ran $jobs jobs")
+  }
+
+  test("reloading a master + sibling group into its own catalog runs 79 Spark jobs") {
+    // the reload reads 4 id watermarks, the master's preserved chart
+    // metadata (3 tables) and the theme rows back from the catalog;
+    // under the declared schemas none of those 8 reads runs a
+    // schema-inference job
+    val dir = java.nio.file.Files.createTempDirectory("graft_runner_reload").toString
+    val catalog = new ParquetCatalog(spark, dir)
+    runMiniGroup(catalog)
+    val jobs = jobsOf(runMiniGroup(catalog))
+    println(s"[ProductRunnerSpec] master + sibling reload: $jobs jobs")
+    assert(jobs == 79, s"the reload ran $jobs jobs")
   }
 
   test("expandSiblings: master first, deduplicated") {
@@ -194,15 +176,15 @@ class ProductRunnerSpec extends AnyFunSuite {
         uomCodeset = MiniCube.uomCodeset,
         subjectCodeset = MiniCube.subjectCodeset)
     load(unmatched, Seq("2099A000000000").toDF("GeographyReferenceId"))
-    assert(!catalog.exists("IndicatorValues"),
-      "a table directory without data files reads as absent")
+    assert(catalog.read("IndicatorValues").count() == 0,
+      "a table directory without data files reads as empty")
     val afterFirst = ProductRunner.nextIds(catalog)
     assert(afterFirst.indicatorValueId == 1L)
     load(normal, MiniCube.geoRef(spark))
     val tables = Seq("IndicatorTheme", "Dimensions", "DimensionValues",
       "Indicator", "IndicatorValues", "GeographyReferenceForIndicator",
       "GeographicLevelForIndicator", "IndicatorMetaData", "RelatedCharts")
-    tables.foreach(t => assert(catalog.exists(t), s"$t missing"))
+    tables.foreach(t => assert(catalog.read(t).count() > 0, s"$t has no rows"))
     assert(catalog.readProduct("IndicatorValues", normal).count() == 6)
     // each watermark is the table's MAX(id) + 1, and the second load's
     // ids continue past the first load's

@@ -673,35 +673,34 @@ class StreamingMultimodalIoSpec extends AnyFunSuite {
     assert(resized.feature(4) == resized.feature(0)) // cycle-pad
   }
 
-  test("catalog: schema evolution across products via readMerged") {
-    import graft.io.ParquetCatalog
+  test("catalog: old partitions read a new column as NULL") {
     val dir = java.nio.file.Files.createTempDirectory("graft_evo").toString
     val cat = new ParquetCatalog(spark, dir)
-    cat.writeProduct("evo", Seq((1L, "a")).toDF("id", "v"), 100L)
-    // product 200 ships a NEW column the old partition lacks
-    cat.writeProduct("evo", Seq((2L, "b", 9L)).toDF("id", "v", "extra"), 200L)
-    val merged = cat.readMerged("evo")
-    assert(merged.columns.toSet == Set("id", "v", "extra"))
-    val rows = merged.select("id", "v", "extra")
-      .as[(Long, String, Option[Long])].collect().toSet
-    assert(rows == Set((1L, "a", None), (2L, "b", Some(9L))))
-    // per-product reads still serve the old partition's data intact
-    // (on the common columns — which footer the plain read samples for
-    // its schema is not pinned, so only data is asserted)
-    assert(cat.readProduct("evo", 100L).select("id", "v")
-      .as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+    // product 100 was written before IndicatorValueCode was declared
+    Seq((1L, 1.5, 0)).toDF("IndicatorValueId", "VALUE", "NullReasonId")
+      .write.parquet(s"$dir/IndicatorValues/ProductPartitionId=100")
+    cat.writeProduct("IndicatorValues", Seq((2L, 2.5, 0, "code"))
+      .toDF("IndicatorValueId", "VALUE", "NullReasonId", "IndicatorValueCode"), 200L)
+    val rows = cat.read("IndicatorValues")
+      .as[(Long, Double, Int, Option[String])].collect().toSet
+    assert(rows == Set((1L, 1.5, 0, None), (2L, 2.5, 0, Some("code"))))
+    assert(cat.readProduct("IndicatorValues", 100L).select("IndicatorValueId", "VALUE")
+      .as[(Long, Double)].collect().toSeq == Seq((1L, 1.5)))
   }
 
   test("catalog: per-product dynamic overwrite leaves other products intact") {
     val dir = java.nio.file.Files.createTempDirectory("graft_cat").toString
     val cat = new ParquetCatalog(spark, dir)
-    cat.writeProduct("t", Seq((1, "a")).toDF("id", "v"), 100L)
-    cat.writeProduct("t", Seq((2, "b")).toDF("id", "v"), 200L)
-    cat.writeProduct("t", Seq((3, "c")).toDF("id", "v"), 100L) // replace product 100
-    val all = cat.read("t").as[(Int, String)].collect().toSet
-    assert(all == Set((3, "c"), (2, "b")))
-    cat.deleteProduct("t", 200L)
-    assert(cat.read("t").as[(Int, String)].collect().toSet == Set((3, "c")))
+    val t = "GeographicLevelForIndicator"
+    def write(id: Long, level: String, pid: Long) =
+      cat.writeProduct(t, Seq((id, level)).toDF("IndicatorId", "GeographicLevelId"), pid)
+    write(1L, "a", 100L)
+    write(2L, "b", 200L)
+    write(3L, "c", 100L) // replace product 100
+    val all = cat.read(t).as[(Long, String)].collect().toSet
+    assert(all == Set((3L, "c"), (2L, "b")))
+    cat.deleteProduct(t, 200L)
+    assert(cat.read(t).as[(Long, String)].collect().toSet == Set((3L, "c")))
   }
 
   test("Wds parsers: metadata, merge config, defaults, changed list") {
