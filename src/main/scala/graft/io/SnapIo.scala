@@ -206,6 +206,30 @@ object SnapIo {
       finally s.close()
     }
 
+  /** Per-JVM scratch root for the gates that stage files of their
+    * own (format round trips, snap tables, streaming sinks and
+    * checkpoints): PID-keyed under java.io.tmpdir, so concurrent
+    * Verify/Bench/PlanReport processes never delete each other's
+    * scratch mid-read, and removed at JVM exit, so runs do not leave
+    * corpus copies behind.
+    */
+  private[graft] lazy val scratchRoot: java.nio.file.Path = {
+    val p = Paths.get(sys.props("java.io.tmpdir"),
+      s"graft_scratch_${ProcessHandle.current().pid()}")
+    Runtime.getRuntime.addShutdownHook(
+      new Thread(() => deleteRecursive(p.toString)))
+    p
+  }
+
+  /** `scratchRoot/name`, wiped before reuse: repeated runs inside one
+    * JVM hold at most ONE copy per purpose.
+    */
+  private[graft] def scratchDir(name: String): String = {
+    val p = scratchRoot.resolve(name).toString
+    deleteRecursive(p)
+    p
+  }
+
   /** Move a directory (RENAME TABLE within a warehouse). */
   def rename(from: String, to: String): Unit =
     if (hasScheme(from) || hasScheme(to)) {

@@ -66,8 +66,10 @@ import org.apache.spark.sql.functions._
   * Checkpoint format: `version=<v>`, zero or more `batch=<id>` lines,
   * then file lines identical to a manifest's.
   *
-  * Stats are computed by reading back ONLY the freshly written files
-  * (one delta-sized scan per commit, never the table).
+  * Stats come from the task writer that writes each file, and every
+  * read — snapshot, pruned, change diff, or a rewrite inside
+  * compact/merge/delete — is one DSv2 snap scan over an explicit file
+  * list (see [[readFiles]]).
   */
 object SnapTable {
 
@@ -462,8 +464,8 @@ object SnapTable {
         nullable = true, metadata = md)
     })
 
-  /** Union in order, first occurrence of a name wins its type — the
-    * same additive-evolution contract mergeSchema applies to footers.
+  /** Union in order, first occurrence of a name wins its type —
+    * additive evolution: a later schema only appends new columns.
     */
   private def unionSchemas(ss: Seq[org.apache.spark.sql.types.StructType])
       : org.apache.spark.sql.types.StructType = {
@@ -663,16 +665,11 @@ object SnapTable {
     import org.apache.spark.sql.types._
     val dataDir = SnapIo.child(root, "data",
       java.util.UUID.randomUUID().toString)
-    // rewrites hand in frames read raw, in PHYSICAL names: key every
-    // stat by the LOGICAL name filters arrive with, and let the writer
-    // map back to physical parquet columns (phys names are uniquified,
-    // never another field's logical name, so the inverse is exact)
+    // every frame arrives under LOGICAL names (rewrites read through
+    // readFiles): stats key by them, and the writer maps them to the
+    // physical parquet columns
     val cmap = colMap(root)
-    val logicalOf = cmap.map(_.swap)
-    val schema = org.apache.spark.sql.graft.SchemaShim.asNullable(
-      StructType(df.schema.fields.map(f =>
-        if (cmap.contains(f.name)) f
-        else f.copy(name = logicalOf.getOrElse(f.name, f.name)))))
+    val schema = org.apache.spark.sql.graft.SchemaShim.asNullable(df.schema)
     def field(c: String): StructField =
       schema.fields.find(_.name == c)
         .orElse(schema.fields.find(_.name.equalsIgnoreCase(c)))
@@ -715,7 +712,7 @@ object SnapTable {
         qe.toRdd.mapPartitionsWithIndex((pid, rows) =>
           Iterator.single(factory.writeAll(pid, rows))).collect()
       }.toSeq
-    graft.sources.SnapSource.writeCommitAgg(bloomDir, messages, cmap)
+    graft.sources.SnapSource.writeCommitAgg(bloomDir, messages, schema, cmap)
     messages.flatMap(_.files).sortBy(_.path)
   }
 
@@ -1221,46 +1218,30 @@ object SnapTable {
   private[graft] def normPath(s: String): String =
     s.replaceFirst("^file:/+", "/")
 
-  /** Read a file set applying DELETION VECTORS: files without a DV
-    * keep the plain (mergeSchema) parquet path — identical plan to
-    * before DVs existed — and DV'd files filter their deleted
-    * positions EXECUTOR-SIDE: the plan carries only a (file path →
-    * sidecar path) map (one entry per DV'd file, never a position),
-    * each scan task loads its own file's sidecar through the per-JVM
-    * [[graft.functions.DvCache]] and binary-searches
-    * `_metadata.row_index` — so DVs accumulated across many
-    * operations never rebuild their positions on the driver, and the
-    * scan stays a single codegen'd filter instead of an anti-join.
-    * Positions key on `_metadata.row_index`, so correctness is
-    * independent of how Spark splits the file.
+  /** The one snap read primitive: a frame over exactly `files`
+    * through the DSv2 [[graft.sources.SnapScan]], at the table schema
+    * recorded as of `asOf` (a legacy log without schema headers falls
+    * back to [[graft.sources.SnapSource.inferSchema]]'s footer union).
+    * Columns come back under their LOGICAL names, deletion vectors are
+    * subtracted in the reader, and filters, aggregates and LIMIT still
+    * push down against these files' manifest stats. Building the frame
+    * runs no Spark job.
     */
-  private[graft] def readFiles(spark: SparkSession,
-      files: Seq[FileStat]): DataFrame = {
-    val (dvd, plain) = files.partition(_.dv.isDefined)
-    def rd(fs: Seq[FileStat]): DataFrame =
-      spark.read.option("mergeSchema", "true").parquet(fs.map(_.path): _*)
-    if (dvd.isEmpty) rd(files)
-    else {
-      val dvByPath: Map[String, String] =
-        dvd.map(f => normPath(f.path) -> f.dv.get._1).toMap
-      val raw = rd(dvd)
-      val keep = org.apache.spark.sql.graft.ColumnShim.column(
-        org.apache.spark.sql.catalyst.expressions.Not(
-          graft.functions.DvDeleted(
-            org.apache.spark.sql.graft.ColumnShim.expression(
-              col("_metadata.file_path")),
-            org.apache.spark.sql.graft.ColumnShim.expression(
-              col("_metadata.row_index")),
-            dvByPath)))
-      val clean = raw.filter(keep)
-      if (plain.isEmpty) clean
-      else rd(plain).unionByName(clean, allowMissingColumns = true)
-    }
+  private[graft] def readFiles(spark: SparkSession, root: String,
+      files: Seq[FileStat], asOf: Option[Int]): DataFrame = {
+    val table = new graft.sources.SnapDsvTable(root, asOf,
+      graft.sources.SnapSource.inferSchema(root, asOf),
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty(),
+      pinned = Some(files))
+    org.apache.spark.sql.graft.PlanShim.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(table, None, None))
   }
 
   /** Multi-dimensional file skipping: keep only files whose per-column
-    * boxes intersect EVERY requested [lo, hi]; re-apply the row
-    * predicate (files are a superset), so the result is exact.
+    * boxes intersect EVERY requested [lo, hi], read them through
+    * [[readFiles]] and re-apply the row predicate (files are a
+    * superset), so the result is exact.
     */
   def readPrunedMulti(spark: SparkSession, root: String,
       bounds: Seq[(String, (Long, Long))],
@@ -1271,11 +1252,9 @@ object SnapTable {
       // only a recorded non-overlapping box can prune it
       f.range(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
     })
-    val base =
-      if (hit.isEmpty) read(spark, root, asOf).filter(lit(false))
-      else readFiles(spark, hit)
-    bounds.foldLeft(base) { case (df, (c, (lo, hi))) =>
-      df.filter(statLong(df.schema, c).between(lo, hi))
+    bounds.foldLeft(readFiles(spark, root, hit, asOf)) {
+      case (df, (c, (lo, hi))) =>
+        df.filter(statLong(df.schema, c).between(lo, hi))
     }
   }
 
@@ -1298,7 +1277,7 @@ object SnapTable {
     val frame = read(spark, root, Some(baseV))
     val rewritten = writeFiles(frame, root, Seq(statCol), targetFiles)
     beforePublish()
-    // the compaction frame IS the resolved snapshot (mergeSchema union)
+    // the compaction frame carries the snapshot's recorded schema
     publishRebasing(root, baseV, rewritten, _ => false,
       schema = Some(frame.schema))
   }
@@ -1355,14 +1334,14 @@ object SnapTable {
       case (Some(tag), Some(pc)) =>
         // COMPOSITE identity(pc) + bucket(k) layout: one routed pass
         // per (key, bucket) cell — both layout proofs survive
-        rewriteKeyed(spark, root, touched, statCols, pc, Some(tag))
+        rewriteKeyed(spark, root, baseV, touched, statCols, pc, Some(tag))
       case (Some(tag), None) =>
         // ONE PASS for N DV'd bucket files: after a wide MERGE leaves
         // DVs on thousands of bucket files, a per-file rewrite loop
         // is thousands of serial driver-dispatched jobs — instead
         // route ALL surviving rows through the bucket function at
         // once. Same-bucket DV'd files merge; tags stay exact.
-        rewriteBucketed(spark, root, touched, statCols, tag)
+        rewriteBucketed(spark, root, baseV, touched, statCols, tag)
       case (None, Some(pc)) =>
         // IDENTITY layout: ONE routed pass — each key's rows to its
         // own output partition via the manifest-derived slot map, so
@@ -1370,10 +1349,10 @@ object SnapTable {
         // KeyGroupedPartitioning and SPJ rest on survives while a
         // wide MERGE's thousands of DV'd key files compact in a
         // single Spark job (was one job per touched key).
-        rewriteKeyed(spark, root, touched, statCols, pc, None)
+        rewriteKeyed(spark, root, baseV, touched, statCols, pc, None)
       case (None, None) =>
-        writeFiles(readFiles(spark, touched), root, statCols,
-          math.max(1, touched.size))
+        writeFiles(readFiles(spark, root, touched, Some(baseV)), root,
+          statCols, math.max(1, touched.size))
     }
     val untouched = live.filterNot(_.dv.isDefined)
     (publishRebasing(root, baseV, untouched ++ rewritten, _ => false,
@@ -1393,10 +1372,11 @@ object SnapTable {
     * jobs); same-bucket inputs merge.
     */
   private def rewriteBucketed(spark: SparkSession, root: String,
-      files: Seq[FileStat], statCols: Seq[String],
+      baseV: Int, files: Seq[FileStat], statCols: Seq[String],
       tag: String): Seq[FileStat] = {
     val cut = tag.indexOf('#')
-    routeBucketedFrame(spark, root, readFiles(spark, files), statCols,
+    routeBucketedFrame(spark, root, readFiles(spark, root, files,
+      Some(baseV)), statCols,
       tag.substring(0, cut), tag.substring(cut + 2).toInt)
   }
 
@@ -1430,7 +1410,7 @@ object SnapTable {
     * don't prove their cell (foreign Scala-API commits) fall back
     * to the per-cell-group loop, never wrong.
     */
-  private def rewriteKeyed(spark: SparkSession, root: String,
+  private def rewriteKeyed(spark: SparkSession, root: String, baseV: Int,
       files: Seq[FileStat], statCols: Seq[String],
       pc: String, bucketTag: Option[String]): Seq[FileStat] = {
     def sentinel(b: (Long, Long)): Boolean =
@@ -1476,7 +1456,8 @@ object SnapTable {
       return files
         .groupBy(f => (f.range(pc), bucketTag.map(f.range(_))))
         .values.toSeq.flatMap { fs =>
-          writeFiles(readFiles(spark, fs), root, statCols, 1).map(retag)
+          writeFiles(readFiles(spark, root, fs, Some(baseV)), root,
+            statCols, 1).map(retag)
         }
     // cell slots from the manifest (no discovery job); every bucket
     // of a present identity key gets the null-identity slot too —
@@ -1486,8 +1467,8 @@ object SnapTable {
       (files.map(cellOf) ++ files.map(cellOf).map {
         case (_, b) => (None: Option[Long], b)
       }).distinct.zipWithIndex.toMap
-    routeToCells(spark, root, readFiles(spark, files), statCols, pc,
-      bucketTag.map(_ => (kc, n)), keySlots)
+    routeToCells(spark, root, readFiles(spark, root, files, Some(baseV)),
+      statCols, pc, bucketTag.map(_ => (kc, n)), keySlots)
   }
 
   /** The typed-box long encoding of an external row value — the same
@@ -1523,12 +1504,8 @@ object SnapTable {
       keySlots: Map[(Option[Long], Option[Long]), Int]): Seq[FileStat] = {
     def sentinel(b: (Long, Long)): Boolean =
       b._1 == Long.MinValue && b._2 == Long.MaxValue
-    val cmap = colMap(root)
-    def physOf(c: String): String =
-      if (frame.columns.contains(c)) c else cmap.getOrElse(c, c)
-    val pcIdx = frame.schema.fieldIndex(physOf(pc))
-    val kcIdx = bucket.map { case (kc, _) =>
-      frame.schema.fieldIndex(physOf(kc)) }
+    val pcIdx = frame.schema.fieldIndex(pc)
+    val kcIdx = bucket.map { case (kc, _) => frame.schema.fieldIndex(kc) }
     val kcWide = kcIdx.forall { i =>
       val dt = frame.schema(i).dataType
       dt == org.apache.spark.sql.types.LongType ||
@@ -1625,7 +1602,7 @@ object SnapTable {
       // composite identity + bucket: one routed pass per (key,
       // bucket) cell, both layout proofs preserved
       case (Some(tag), Some(pc)) =>
-        rewriteKeyed(spark, root, merged.flatten, statCols, pc,
+        rewriteKeyed(spark, root, baseV, merged.flatten, statCols, pc,
           Some(tag))
       // bucketed: ONE routed pass for every selected group (the
       // streaming tail leaves small files in EVERY bucket — a
@@ -1633,15 +1610,16 @@ object SnapTable {
       // are per-bucket by construction, so the router reproduces
       // them exactly, one output file per touched bucket
       case (Some(tag), None) =>
-        rewriteBucketed(spark, root, merged.flatten, statCols, tag)
+        rewriteBucketed(spark, root, baseV, merged.flatten, statCols, tag)
       // identity: ONE routed pass preserving one-file-per-key (the
       // streaming tail leaves small files under MANY keys — a
       // per-key job loop is up to that many serial jobs); plain:
       // one global merge group
       case (None, Some(pc)) =>
-        rewriteKeyed(spark, root, merged.flatten, statCols, pc, None)
+        rewriteKeyed(spark, root, baseV, merged.flatten, statCols, pc,
+          None)
       case (None, None) => merged.flatMap { fs =>
-        writeFiles(readFiles(spark, fs), root, statCols, 1)
+        writeFiles(readFiles(spark, root, fs, Some(baseV)), root, statCols, 1)
       }
     }
     val untouched = live.filterNot(merged.flatten.toSet)
@@ -1833,10 +1811,9 @@ object SnapTable {
     val untouched = live.filterNot(touched.toSet)
     val current =
       if (touched.isEmpty) updates.limit(0)
-      // DV-aware (deleted rows stay dead), projected to LOGICAL names
-      // so the anti-join against the logical-named updates aligns
-      else toLogical(readFiles(spark, touched),
-        tableSchema(root, Some(baseV)))
+      // DV-aware (deleted rows stay dead), under the LOGICAL names
+      // the anti-join against the updates aligns on
+      else readFiles(spark, root, touched, Some(baseV))
     val merged = current
       .join(updates.select(statCol), Seq(statCol), "left_anti")
       .unionByName(updates)
@@ -1887,10 +1864,9 @@ object SnapTable {
       // version-offset streams for a commit that changed nothing)
       return (baseV, 0, 0L)
     }
-    // DV-aware, projected to logical names so statCol and the user's
-    // extra predicate resolve on a renamed table
-    val current = toLogical(readFiles(spark, touched),
-      tableSchema(root, Some(baseV)))
+    // DV-aware, under logical names so statCol and the user's extra
+    // predicate resolve on a renamed table
+    val current = readFiles(spark, root, touched, Some(baseV))
     // NULL-safe: a three-valued extra predicate must not let a row
     // dodge BOTH the delete and the keep
     val doomedPred = coalesce(statLong(current.schema, statCol).between(lo, hi) &&
@@ -1950,7 +1926,7 @@ object SnapTable {
     // column names — positions must be physical) — the old DV's
     // positions are subtracted below so re-deleting dead rows
     // neither double-counts nor re-marks
-    val raw = spark.read.option("mergeSchema", "true")
+    val raw = spark.read.schema(physicalSchema(root, Some(baseV)))
       .parquet(touched.map(_.path): _*)
     val physStat = colMap(root).getOrElse(statCol, statCol)
     val doomedPred = coalesce(
@@ -2050,7 +2026,7 @@ object SnapTable {
       val hits =
         if (touched.isEmpty) Array.empty[org.apache.spark.sql.Row]
         else {
-          val raw = spark.read.option("mergeSchema", "true")
+          val raw = spark.read.schema(physicalSchema(root, Some(baseV)))
             .parquet(touched.map(_.path): _*)
           val physStat = colMap(root).getOrElse(statCol, statCol)
           raw.select(
@@ -2118,58 +2094,27 @@ object SnapTable {
     } finally { updates.unpersist(); () }
   }
 
-  /** Snapshot read as of a version (default: latest). `mergeSchema`
-    * unions the file schemas so a commit that ADDED a column reads
-    * together with older files (missing values null) — additive
-    * schema evolution without rewriting history. (A production tier
-    * would carry the schema in the manifest; the footer-merge is the
-    * same contract at this scale.)
+  /** The table schema as of `asOf` under PHYSICAL (parquet) column
+    * names — what a raw parquet read of the data files must request
+    * when it needs `_metadata.row_index` positions, so it infers
+    * nothing.
     */
-  /** Project a physical-named frame onto the table's LOGICAL schema:
-    * renamed columns come back under their logical name, dropped
-    * columns vanish, absent ones read NULL. A table whose physical
-    * and logical layouts coincide returns the frame untouched (the
-    * pre-mapping plan, byte for byte).
-    */
-  private def toLogical(df: DataFrame,
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-    schema match {
-      case Some(s)
-          if colMapOf(s).nonEmpty ||
-            !s.fieldNames.sameElements(df.columns) =>
-        df.select(s.fields.toSeq.map { f =>
-          val p = physOf(f)
-          if (df.columns.contains(p)) col(p).as(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        }: _*)
-      case _ => df
-    }
+  private def physicalSchema(root: String, asOf: Option[Int])
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(
+      graft.sources.SnapSource.inferSchema(root, asOf).fields.toSeq.map(f =>
+        org.apache.spark.sql.types.StructField(physOf(f), f.dataType)))
 
+  /** Snapshot read as of a version (default: latest): the live file
+    * set through [[readFiles]], at the schema recorded as of that
+    * version — additive evolution reads older files' missing columns
+    * as NULL, renamed columns under their new name. An empty live set
+    * (everything deleted, an empty overwrite) reads as an empty frame
+    * with that schema. Building the frame runs no Spark job.
+    */
   def read(spark: SparkSession, root: String,
-      asOf: Option[Int] = None): DataFrame = {
-    val files = liveFiles(root, asOf)
-    if (files.nonEmpty)
-      // plain parquet plan unless a DV or a schema mapping exists
-      toLogical(readFiles(spark, files), tableSchema(root, asOf))
-    else {
-      // a LEGAL table state — everything deleted, or an overwrite of
-      // an empty frame — must read as an empty relation, not throw.
-      // Schema from the manifest header; for a legacy log, from the
-      // newest manifest that still referenced files (best effort: its
-      // files survive vacuum only while some kept version needs them).
-      val schema = tableSchema(root, asOf).getOrElse {
-        val lastWithFiles = manifests(root, asOf).reverse
-          .find(_.files.nonEmpty)
-          .getOrElse(throw new IllegalArgumentException(
-            s"snapshot of $root at $asOf has no files and no recorded " +
-              "schema"))
-        spark.read.option("mergeSchema", "true")
-          .parquet(lastWithFiles.files.map(_.path): _*).schema
-      }
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        schema)
-    }
-  }
+      asOf: Option[Int] = None): DataFrame =
+    readFiles(spark, root, liveFiles(root, asOf), asOf)
 
   /** Streaming batch ids recorded anywhere in the log —
     * checkpoint-accelerated (O(tail) manifest reads, not O(versions)
@@ -2268,10 +2213,7 @@ object SnapTable {
       .forall(f =>
         f.dataType == org.apache.spark.sql.types.LongType ||
           f.dataType == org.apache.spark.sql.types.TimestampType)
-    val cmap = colMap(root)
-    val bcPhys =
-      if (frame.columns.contains(bc)) bc else cmap.getOrElse(bc, bc)
-    val shaped = frame.repartition(n, col(bcPhys))
+    val shaped = frame.repartition(n, col(bc))
     writeFiles(shaped, root, statCols, filesPerCommit = -1).map { nf =>
       val b = nf.range(bc) match {
         case Some((mn, mx))
@@ -2310,10 +2252,10 @@ object SnapTable {
     * over the touched files turns a rewrite back into its net effect:
     * rows present in both the removed and added sides cancel, so a
     * merge that rewrote one file surfaces only the rows it actually
-    * changed. Across a schema-evolving span the two sides are aligned
-    * to the UNION of their columns (absent ones null) before the
-    * diff, so an ALTER-ADD-COLUMN between the versions still yields a
-    * feed instead of an AnalysisException. Returns (inserted, deleted)
+    * changed. Both sides read through [[readFiles]] at the schema
+    * recorded as of `toV`, so an ADD COLUMN between the versions reads
+    * NULL on the older side and a RENAME under the new name; neither
+    * building frame runs a Spark job. Returns (inserted, deleted)
     * frames — the feed an incremental consumer (materialized-view
     * refresh, downstream sync) applies instead of re-reading the
     * table.
@@ -2331,23 +2273,8 @@ object SnapTable {
     val afterKeys = after.map(key).toSet
     val added = after.filterNot(f => beforeKeys.contains(key(f)))
     val removed = before.filterNot(f => afterKeys.contains(key(f)))
-    def rd(fs: Seq[FileStat], schemaFrom: Seq[FileStat]): DataFrame =
-      if (fs.nonEmpty) readFiles(spark, fs)
-      else readFiles(spark, schemaFrom).filter(lit(false))
-    require(added.nonEmpty || removed.nonEmpty || after.nonEmpty,
-      s"no files in either snapshot of $root")
-    val addedRaw = rd(added, after ++ before)
-    val removedRaw = rd(removed, after ++ before)
-    val fields = scala.collection.mutable.LinkedHashMap
-      .empty[String, org.apache.spark.sql.types.DataType]
-    (addedRaw.schema ++ removedRaw.schema).foreach(f =>
-      if (!fields.contains(f.name)) fields += f.name -> f.dataType)
-    def align(df: DataFrame): DataFrame = df.select(fields.toSeq.map {
-      case (n, t) =>
-        if (df.columns.contains(n)) col(n) else lit(null).cast(t).as(n)
-    }: _*)
-    val addedDf = align(addedRaw)
-    val removedDf = align(removedRaw)
+    val addedDf = readFiles(spark, root, added, Some(toV))
+    val removedDf = readFiles(spark, root, removed, Some(toV))
     (addedDf.exceptAll(removedDf), removedDf.exceptAll(addedDf))
   }
 
@@ -2430,8 +2357,10 @@ object SnapTable {
 
   /** Snapshot read with manifest-level FILE SKIPPING for
     * `statCol ∈ [lo, hi]`: files whose [min, max] cannot overlap are
-    * never listed to Spark. The row-level predicate is re-applied
-    * (files are a superset), so the result is exact.
+    * never handed to the scan; the survivors are read through
+    * [[readFiles]] (no job to build the frame). The row-level
+    * predicate is re-applied (files are a superset), so the result is
+    * exact; an empty selection keeps the table schema.
     */
   def readPruned(spark: SparkSession, root: String, statCol: String,
       lo: Long, hi: Long, asOf: Option[Int] = None): DataFrame = {
@@ -2440,13 +2369,7 @@ object SnapTable {
       val (mn, mx) = statRange(f, statCol)
       mx >= lo && mn <= hi
     }
-    if (hit.isEmpty)
-      // preserve the schema for an empty selection
-      read(spark, root, asOf)
-        .filter(lit(false))
-    else {
-      val df = readFiles(spark, hit)
-      df.filter(statLong(df.schema, statCol).between(lo, hi))
-    }
+    val df = readFiles(spark, root, hit, asOf)
+    df.filter(statLong(df.schema, statCol).between(lo, hi))
   }
 }

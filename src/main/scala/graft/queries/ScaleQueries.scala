@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.io.SnapIo.scratchDir
 import graft.ops.{BloomPrune, IntervalJoin, MaterializedAgg, Mixture, TableProfile, TextOps, ZOrder}
 import graft.queries.Fns.r4
 
@@ -59,36 +60,6 @@ object ScaleQueries {
   /** Per-supplier top-3 lineitems by price via a correlated LATERAL
     * subquery — identical ANSI text for Spark and DuckDB.
     */
-  /** Per-JVM scratch directory for the format round-trip gates
-    * (q245-q247, q267): one path per purpose under a PID-keyed root,
-    * wiped before reuse, so repeated sweeps inside one JVM hold at
-    * most ONE corpus copy each — and CONCURRENT Verify/Bench/
-    * PlanReport processes can never delete each other's scratch
-    * mid-read (the pre-PID fixed path did exactly that). The root is
-    * removed at JVM exit so parallel processes don't accumulate
-    * corpus copies in the box tmpdir.
-    */
-  private[graft] lazy val scratchRoot: java.nio.file.Path = {
-    val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_scratch_${ProcessHandle.current().pid()}")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(p)))
-    p
-  }
-
-  private def deleteRec(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => try java.nio.file.Files.delete(f)
-        catch { case _: java.io.IOException => () })
-    }
-
-  private def scratchDir(name: String): String = {
-    val p = scratchRoot.resolve(name)
-    deleteRec(p)
-    p.toString
-  }
-
   private def lateralTopkSql(supplier: String, lineitem: String): String =
     s"""SELECT s.s_suppkey, l.l_orderkey, l.l_extendedprice
        |FROM $supplier s, LATERAL (
@@ -600,7 +571,7 @@ object ScaleQueries {
     // end to end: four disjoint orderkey-range commits (one file
     // each), a pruned read for a range overlapping exactly two of
     // them, and the number of files actually opened REPORTED AS DATA
-    // (count of distinct input_file_name). The oracle recomputes the
+    // (count of distinct `_snap_file` values). The oracle recomputes the
     // skip decision from the declared layout — so a reader that opens
     // too many (or too few) files hash-fails, not just slows down. At
     // scale this tier prunes the listing before any footer is read.
@@ -615,9 +586,8 @@ object ScaleQueries {
             root, "o_orderkey")
         }
         graft.io.SnapTable.readPruned(s, root, "o_orderkey", 5000L, 10000L)
-          // project the (nondeterministic) file name first; aggregates
-          // may not take it as a direct argument
-          .select(col("o_totalprice"), input_file_name().as("f"))
+          .select(col("o_totalprice"),
+            col(graft.sources.SnapSource.FileColumn).as("f"))
           .agg(count(lit(1)).as("n_rows"),
             sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
               .as("sum_cents"),
@@ -651,7 +621,8 @@ object ScaleQueries {
         }
         graft.io.SnapTable.compact(s, root, "o_orderkey", targetFiles = 2)
         graft.io.SnapTable.read(s, root)
-          .select(col("o_totalprice"), input_file_name().as("f"))
+          .select(col("o_totalprice"),
+            col(graft.sources.SnapSource.FileColumn).as("f"))
           .agg(count(lit(1)).as("n_rows"),
             sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
               .as("sum_cents"),
@@ -686,7 +657,8 @@ object ScaleQueries {
           .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
         graft.io.SnapTable.merge(s, root, "o_orderkey", updates)
         graft.io.SnapTable.read(s, root)
-          .select(col("o_totalprice"), input_file_name().as("f"))
+          .select(col("o_totalprice"),
+            col(graft.sources.SnapSource.FileColumn).as("f"))
           .agg(count(lit(1)).as("n_rows"),
             sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
               .as("sum_cents"),
@@ -875,7 +847,8 @@ object ScaleQueries {
         }
         graft.io.SnapTable.readPrunedMulti(s, root,
             Seq("o_orderkey" -> (0L, 5000L), "o_custkey" -> (0L, 500L)))
-          .select(col("o_totalprice"), input_file_name().as("f"))
+          .select(col("o_totalprice"),
+            col(graft.sources.SnapSource.FileColumn).as("f"))
           .agg(count(lit(1)).as("n_rows"),
             sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
               .as("sum_cents"),
@@ -3212,7 +3185,7 @@ object ScaleQueries {
             _ != (Long.MinValue, Long.MaxValue))))
         val pruned = graft.io.SnapTable.readPrunedMulti(s, root,
           Seq("a" -> ((10L, 14L)), "m" -> ((3L, 5L))))
-        val opened = pruned.select(input_file_name())
+        val opened = pruned.select(col(graft.sources.SnapSource.FileColumn))
           .distinct().count()
         val agg = pruned.agg(count(lit(1)), sum("cents")).collect()(0)
         s.range(1).select(

@@ -59,12 +59,10 @@ import graft.io.SnapTable.FileStat
   *    (Iceberg's `_file`), which lets a QUERY observe the skipping
   *    decision — the gates hash the opened-file count as data.
   *
-  * Schema comes from the live files' parquet footers (one footer per
-  * commit directory — files of one commit share a schema), unioned in
-  * commit order so additive evolution surfaces older files' missing
-  * columns as NULL, exactly like [[SnapTable.read]]'s mergeSchema.
-  * Supported leaf types: BIGINT, INT, DOUBLE, FLOAT, BOOLEAN, STRING,
-  * DATE (a production tier would carry the schema in the manifest).
+  * Schema comes from the manifest (see [[SnapSource.inferSchema]]),
+  * so additive evolution surfaces older files' missing columns as
+  * NULL. The Scala API reads through this same scan:
+  * [[SnapTable.readFiles]] pins it to an explicit file list.
   *
   * Usage:
   * {{{
@@ -290,6 +288,7 @@ object SnapSource {
   private[graft] def writeCommitAgg(bloomDir: String,
       messages: Seq[org.apache.spark.sql.connector.write
         .WriterCommitMessage],
+      schema: StructType,
       physMap: Map[String, String] = Map.empty): Unit = {
     if (bloomDir == null) return
     val byCol = messages
@@ -314,7 +313,11 @@ object SnapSource {
       val bits = org.apache.spark.util.sketch.BloomFilter
         .optimalNumOfBits(cap, SnapBloomSkip.aggFpp)
       def phys(c: String): String = physMap.getOrElse(c, c)
-      val row = spark.read.parquet(withBlooms.map(_.path): _*)
+      // the write schema under physical names: the read infers nothing
+      val fileSchema = StructType(cols.map(c => StructField(phys(c),
+        schema.fields.find(_.name.equalsIgnoreCase(c)).get.dataType)))
+      val row = spark.read.schema(fileSchema)
+        .parquet(withBlooms.map(_.path): _*)
         .select(cols.map(c => col(phys(c))): _*)
         .agg(
           graft.ops.BloomPrune.bloomAgg(col(phys(cols.head)), cap, bits)
@@ -440,7 +443,8 @@ object SnapSource {
 
 class SnapDsvTable(root: String, asOf: Option[Int], tableSchema: StructType,
     tableOptions: CaseInsensitiveStringMap,
-    tableProps: Map[String, String] = Map.empty)
+    tableProps: Map[String, String] = Map.empty,
+    pinned: Option[Seq[FileStat]] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -521,7 +525,7 @@ class SnapDsvTable(root: String, asOf: Option[Int], tableSchema: StructType,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new SnapScanBuilder(root, asOf, tableSchema, options, partCol,
-      bucketSpec, bloomCols)
+      bucketSpec, bloomCols, pinned)
 
   /** statCols resolution for writes that carry no reader option (SQL
     * INSERT INTO / CTAS): catalog table properties first (either
@@ -670,7 +674,8 @@ class SnapScanBuilder(root: String, asOf: Option[Int], full: StructType,
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
     partCol: Option[String] = None,
     bucketSpec: Option[(String, Int)] = None,
-    bloomCols: Seq[String] = Nil)
+    bloomCols: Seq[String] = Nil,
+    pinned: Option[Seq[FileStat]] = None)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit {
@@ -710,10 +715,12 @@ class SnapScanBuilder(root: String, asOf: Option[Int], full: StructType,
 
   /** The snapshot this scan plans AND reads — one listing, pinned.
     * Closes the TOCTOU between pushdown validation (exact filters,
-    * pushable aggregates) and build(): both see these files.
+    * pushable aggregates) and build(): both see these files. A
+    * `pinned` list (the Scala API's file-set reads, see
+    * [[SnapTable.readFiles]]) replaces the listing outright.
     */
   private[sources] lazy val liveAtPlan: Seq[FileStat] =
-    SnapTable.liveFiles(root, asOf)
+    pinned.getOrElse(SnapTable.liveFiles(root, asOf))
 
   /** Checkpoint-pack resolver for the bloom tier (bloomSurvivors
     * tier 0), keyed on this snapshot's newest checkpoint — one
@@ -2099,7 +2106,7 @@ class MetadataOnlyReader(part: SnapFilePartition, required: StructType)
   * scan costs. The requested schema is the scan's pruned DATA
   * projection; a requested column ABSENT from the file (additive
   * evolution) comes back as an all-null vector — Spark's own
-  * missing-column path, matching mergeSchema. The `_snap_file`
+  * missing-column path (additive schema evolution). The `_snap_file`
   * metadata column rides along as a per-file
   * [[ConstantColumnVector]] spliced into each output batch (how
   * Spark's own `_metadata` struct is served).
@@ -2473,7 +2480,7 @@ class SnapBatchWrite(root: String, schema: StructType,
     // union the tasks' sketch blobs into the commit's aggregate
     // sidecar BEFORE publish (a reader of the new manifest must find
     // it; a missing aggregate only costs pruning, never correctness)
-    SnapSource.writeCommitAgg(bloomDir, messages.toSeq, physMap)
+    SnapSource.writeCommitAgg(bloomDir, messages.toSeq, schema, physMap)
     SnapTable.publish(root,
       if (overwrite) "overwrite" else "append", files,
       frameSchema = Some(schema))
@@ -3103,7 +3110,7 @@ class SnapReplaceBatchWrite(op: SnapRowLevelOperation, root: String,
     val rewritten = messages.toSeq
       .collect { case SnapWriteCommit(fs, _, _) => fs }
       .flatten.sortBy(_.path)
-    SnapSource.writeCommitAgg(bloomDir, messages.toSeq,
+    SnapSource.writeCommitAgg(bloomDir, messages.toSeq, schema,
       SnapTable.colMap(root))
     val replaced = op.scannedFiles.map(_.path).toSet
     val untouched = SnapTable.liveFiles(root, Some(op.baseVersion))

@@ -62,7 +62,7 @@ object ClusteredIngest {
     */
   def ingestedIndexCodes(spark: SparkSession, dir: String,
       ivf: graft.ops.Ivf.Index, rcb: graft.ops.Pq.ResidualCodebooks): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_idxingest")
+    val base = java.nio.file.Paths.get(graft.io.SnapIo.scratchDir("idxingest"))
     val sink = base.resolve("data").toString
     val ck = base.resolve("ck").toString
     val stream = spark.readStream
@@ -86,7 +86,7 @@ object ClusteredIngest {
   }
 
   def ingestedLangCounts(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_zingest")
+    val base = java.nio.file.Paths.get(graft.io.SnapIo.scratchDir("zingest"))
     val sink = base.resolve("data").toString
     val ck = base.resolve("ck").toString
     val stream = spark.readStream

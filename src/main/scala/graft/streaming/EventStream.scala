@@ -194,7 +194,7 @@ object EventStream {
           writer.option("checkpointLocation", ck).start()
         }
         q.awaitTermination()
-      } finally if (ephemeral) deleteTree(ck)
+      } finally if (ephemeral) graft.io.SnapIo.deleteRecursive(ck)
     }
     spark.table(name)
   }
@@ -211,20 +211,6 @@ object EventStream {
         java.nio.file.Files.isWritable(shm)) shm.toString
       else System.getProperty("java.io.tmpdir")
     }
-
-  private def deleteTree(dir: String): Unit =
-    try {
-      val p = java.nio.file.Paths.get(dir)
-      if (java.nio.file.Files.exists(p)) {
-        val s = java.nio.file.Files.walk(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.toSeq.reverse.foreach(f =>
-            try { java.nio.file.Files.delete(f); () }
-            catch { case _: java.io.IOException => () })
-        } finally s.close()
-      }
-    } catch { case _: Exception => () }
 
   private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
 

@@ -83,7 +83,7 @@ object NearDupIngest {
     */
   def ingestedKeepDecisions(spark: SparkSession, dir: String,
       n: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_neardup")
+    val base = java.nio.file.Paths.get(graft.io.SnapIo.scratchDir("neardup"))
     val shStore = base.resolve("shingles").toString
     val decStore = base.resolve("decisions").toString
     val ck = base.resolve("ck").toString

@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.io.SnapTable
@@ -30,7 +28,7 @@ object SnapAb {
     val spark = graft.GraftSession.local(cpus, "graft-snap-ab")
     spark.sparkContext.setLogLevel("WARN")
 
-    val root = Files.createTempDirectory("graft_snap_ab").toString
+    val root = graft.io.SnapIo.scratchDir("snap_ab")
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     SnapTable.commit(li, root, "l_orderkey", filesPerCommit = 8)
     val files = SnapTable.liveFiles(root).map(_.path)
@@ -73,23 +71,15 @@ object SnapAb {
     val wideRatio = best("wide_snap") / best("wide_parquet")
     val narrowRatio = best("narrow_snap") / best("narrow_parquet")
 
-    // DV'd-SCAN A/B: mark a point-delete's worth of rows dead via a
-    // merge-on-read DV, then time the SAME wide fold through (a) the
-    // DSv2 reader (per-task sidecar position filter, row mode) and
-    // (b) the Scala read tier (codegen'd executor-side DvDeleted
-    // filter). The ratio against the clean snap scan IS the per-task
-    // cost of DV application — there is no driver-side position
-    // materialization left to hide in it.
+    // DV'd scan: mark a point-delete's worth of rows dead via a
+    // merge-on-read DV, then time the SAME wide fold through the snap
+    // reader (per-task sidecar position filter, row mode; the Scala
+    // API's SnapTable.read is this same scan). The ratio against the
+    // clean snap scan IS the per-task cost of DV application.
     val (_, dvFiles, dvRows) =
       SnapTable.deleteDv(spark, root, "l_orderkey", 1L, 400L)
-    def wideScala: Long =
-      SnapTable.read(spark, root)
-        .agg(sum(xxhash64(cols.map(col): _*) % 1000003L))
-        .collect()(0).getLong(0)
-    require(wide(viaSnap) == wideScala, "DV'd scan answer drift")
     (1 to rounds).foreach { _ =>
       acc("wide_dv_dsv2") ::= sample(wide(viaSnap))
-      acc("wide_dv_scala") ::= sample(wideScala)
     }
 
     println(
@@ -102,7 +92,6 @@ object SnapAb {
         s""""narrow_ratio":${r3(narrowRatio)},""" +
         s""""dv_files":$dvFiles,"dv_rows":$dvRows,""" +
         s""""wide_dv_dsv2_sec":${r3(best("wide_dv_dsv2"))},""" +
-        s""""wide_dv_scala_sec":${r3(best("wide_dv_scala"))},""" +
         s""""wide_dv_ratio":${r3(best("wide_dv_dsv2") / best("wide_snap"))},""" +
         s""""runs":$rounds,"sf":"$sfDir"}""")
     spark.stop()

@@ -344,8 +344,28 @@ class ScaleOpsSpec extends AnyFunSuite {
     // the q245-q247/q267 round-trip gates write under this root; a
     // fixed path let a concurrent Verify/Bench JVM delete another's
     // scratch mid-read. Per-process isolation = the PID in the path.
-    val root = graft.queries.ScaleQueries.scratchRoot.toString
+    val root = graft.io.SnapIo.scratchRoot.toString
     assert(root.contains(ProcessHandle.current().pid().toString), root)
     assert(root.startsWith(sys.props("java.io.tmpdir")), root)
+  }
+
+  test("streaming ingest gates stage under the scratch root, not java.io.tmpdir") {
+    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+    val own = graft.io.SnapIo.scratchRoot.getFileName.toString
+    def graftEntries(): Set[String] = {
+      val s = java.nio.file.Files.list(tmp)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.getFileName.toString)
+          .filter(n => n.startsWith("graft") && n != own).toSet
+      } finally s.close()
+    }
+    val before = graftEntries()
+    assert(streaming.ClusteredIngest.ingestedLangCounts(spark, dir)
+      .count() > 0)
+    assert(streaming.NearDupIngest.ingestedKeepDecisions(spark, dir)
+      .count() > 0)
+    val leaked = graftEntries() -- before
+    assert(leaked.isEmpty, s"left under $tmp: $leaked")
   }
 }

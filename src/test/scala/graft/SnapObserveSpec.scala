@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -28,8 +29,9 @@ class SnapObserveSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.catalog.graftsnap",
       classOf[graft.sources.SnapCatalog].getName)
 
-  /** Jobs started, SQL executions finished and the file-scan input
-    * paths of those executions while `body` runs.
+  /** Jobs started, SQL executions finished and the data files those
+    * executions scanned (parquet file scans and snap scans) while
+    * `body` runs.
     */
   private case class Trace(jobs: Int, executions: Seq[String],
       scanned: Seq[String])
@@ -56,6 +58,13 @@ class SnapObserveSpec extends AnyFunSuite {
         walk(qe.executedPlan).foreach {
           case s: FileSourceScanExec =>
             s.relation.location.inputFiles.foreach(scanned.add)
+          // snap reads (SnapTable.read and every rewrite) plan one
+          // partition per data file
+          case b: BatchScanExec =>
+            b.inputPartitions.foreach {
+              case p: graft.sources.SnapFilePartition => scanned.add(p.path)
+              case _ => ()
+            }
           case _ => ()
         }
       }

@@ -438,7 +438,8 @@ class SnapRound15Spec extends AnyFunSuite {
     assert(pruned.count() ==
       df.filter(col("a").between(10, 12) && col("b").between(10, 12))
         .count())
-    val opened = pruned.select(input_file_name()).distinct().count()
+    val opened = pruned.select(col(graft.sources.SnapSource.FileColumn))
+      .distinct().count()
     assert(opened < 8, s"2-of-3-dim rectangle must prune files: $opened")
   }
 

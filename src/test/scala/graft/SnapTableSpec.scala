@@ -83,7 +83,8 @@ class SnapTableSpec extends AnyFunSuite {
     val live = SnapTable.liveFiles(root)
     assert(live.size == 3 && live.map(_.rows).sum == 300)
     val pruned = SnapTable.readPruned(spark, root, "id", 150L, 250L)
-    val files = pruned.select(input_file_name()).distinct().count()
+    val files = pruned.select(col(graft.sources.SnapSource.FileColumn))
+      .distinct().count()
     assert(files == 2, s"expected 2 files opened, got $files")
     assert(pruned.count() == 101) // 150..250 inclusive
     // non-overlapping range: zero rows, schema preserved
@@ -217,11 +218,13 @@ class SnapTableSpec extends AnyFunSuite {
     // a rectangle inside one quadrant opens exactly one file
     val one = SnapTable.readPrunedMulti(spark, root,
       Seq("x" -> (2L, 5L), "y" -> (12L, 15L)))
-    assert(one.select(input_file_name()).distinct().count() == 1)
+    assert(one.select(col(graft.sources.SnapSource.FileColumn))
+      .distinct().count() == 1)
     assert(one.count() == 4L * 4L)
     // x alone would keep two files; the y bound cuts the second
     val xOnly = SnapTable.readPrunedMulti(spark, root, Seq("x" -> (2L, 5L)))
-    assert(xOnly.select(input_file_name()).distinct().count() == 2)
+    assert(xOnly.select(col(graft.sources.SnapSource.FileColumn))
+      .distinct().count() == 2)
   }
 
   test("concurrent committers all land, on distinct versions, none lost") {
@@ -977,5 +980,101 @@ class SnapTableSpec extends AnyFunSuite {
     assert(SnapIo.hasScheme("s3a://bucket/t"))
     assert(!SnapIo.hasScheme("/abs/path"))
     assert(!SnapIo.hasScheme("rel/path"))
+  }
+
+  /** Four single-file commits of k = 1..100 (25 keys each). */
+  private def fourFiles(): String = {
+    val root = freshRoot()
+    (0 until 4).foreach { i =>
+      SnapTable.commit(spark.range(i * 25 + 1, i * 25 + 26).select(
+        col("id").as("k"), (col("id") * 3).as("v")), root, "k")
+    }
+    root
+  }
+
+  test("building a snap read runs no job, on a clean and on a DV'd table") {
+    val root = fourFiles()
+    def builds(): Seq[(String, Int)] = {
+      val v = SnapTable.currentVersion(root)
+      Seq(
+        "read" -> TestSpark.jobsOf { SnapTable.read(spark, root); () },
+        "readPruned" -> TestSpark.jobsOf {
+          SnapTable.readPruned(spark, root, "k", 10L, 40L); () },
+        "readPrunedMulti" -> TestSpark.jobsOf {
+          SnapTable.readPrunedMulti(spark, root, Seq("k" -> ((10L, 40L))))
+          () },
+        "changes" -> TestSpark.jobsOf {
+          SnapTable.changes(spark, root, v - 1, v); () })
+    }
+    val clean = builds()
+    assert(clean.forall(_._2 == 0), clean)
+    SnapTable.deleteDv(spark, root, "k", 3L, 5L)
+    assert(SnapTable.liveFiles(root).exists(_.dv.isDefined))
+    val dvd = builds()
+    assert(dvd.forall(_._2 == 0), dvd)
+  }
+
+  test("a DV'd full scan through SnapTable.read is one job") {
+    val root = fourFiles()
+    SnapTable.deleteDv(spark, root, "k", 3L, 5L)
+    val jobs = TestSpark.jobsOf {
+      SnapTable.read(spark, root).write.format("noop").mode("overwrite")
+        .save()
+    }
+    assert(jobs == 1, s"one scan job, saw $jobs")
+    val viaApi = SnapTable.read(spark, root)
+    val viaSql = spark.read.format("graft.sources.SnapSourceProvider")
+      .load(root)
+    assert(viaApi.count() == 97L && viaApi.exceptAll(viaSql).isEmpty &&
+      viaSql.exceptAll(viaApi).isEmpty)
+  }
+
+  test("compact, merge and delete pay no schema-inference job") {
+    // each count is the operation's shaping and write jobs alone:
+    // compact 3 (range sampling + write), merge 4 (key collect +
+    // write), delete 2 (emptiness probe + write)
+    val r1 = fourFiles()
+    assert(TestSpark.jobsOf {
+      SnapTable.compact(spark, r1, "k", targetFiles = 2); () } == 3)
+    val r2 = fourFiles()
+    assert(TestSpark.jobsOf {
+      SnapTable.merge(spark, r2, "k", spark.range(20, 31)
+        .select(col("id").as("k"), lit(0L).as("v"))); () } == 4)
+    val r3 = fourFiles()
+    assert(TestSpark.jobsOf {
+      SnapTable.delete(spark, r3, "k", 10L, 12L); () } == 2)
+    assert(SnapTable.read(spark, r1).count() == 100L)
+    assert(SnapTable.read(spark, r2).filter(col("v") === 0L).count() == 11L)
+    assert(SnapTable.read(spark, r3).count() == 97L)
+  }
+
+  test("rewrites after RENAME COLUMN keep the physical-name mapping") {
+    spark.conf.set("spark.sql.catalog.graftsnap",
+      classOf[graft.sources.SnapCatalog].getName)
+    def renamedTable(extra: String): String = {
+      val root = freshRoot() + "/t"
+      spark.sql(s"CREATE TABLE graftsnap.`$root` (k BIGINT, a BIGINT, " +
+        s"s STRING) $extra TBLPROPERTIES ('statCols'='k')")
+      SnapTable.commitStreamBatch(spark.range(1, 201).selectExpr("id AS k",
+        "id % 7 AS a", "concat('s', id) AS s"), 0L, root, "k")
+      spark.sql(s"ALTER TABLE graftsnap.`$root` RENAME COLUMN s TO label")
+      root
+    }
+    def assertReadable(root: String): Unit = {
+      assert(SnapTable.tableSchema(root).get("label").metadata
+        .getString("snapPhys") == "s")
+      val df = SnapTable.read(spark, root)
+      assert(df.filter(col("label").isNull).count() == 0L)
+      assert(df.filter(col("label") === "s77").count() == 1L)
+    }
+    val bucketed = renamedTable("PARTITIONED BY (bucket(8, k))")
+    spark.sql(s"CALL graftsnap.system.optimize(table => '$bucketed', " +
+      "bucket_count => 4)").collect()
+    assertReadable(bucketed)
+    val plain = renamedTable("")
+    SnapTable.compactZ(spark, plain, Seq("k", "a"), targetFiles = 2)
+    assertReadable(plain)
+    SnapTable.compact(spark, plain, "k", targetFiles = 2)
+    assertReadable(plain)
   }
 }
